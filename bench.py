@@ -58,9 +58,11 @@ _STREAM_VIEWS = (
 )
 
 
-def _time_query(spark, name: str) -> float:
-    """One bench sample of one query: clean cache + drained persist
-    registries before, streaming memory-sink cleanup after."""
+def _time_query(spark, name: str, sf_dir: str = SF_DIR) -> float:
+    """One bench sample of one query at ``sf_dir``: clean cache + drained
+    persist registries before, streaming memory-sink cleanup after. The
+    one timing protocol: tools/ab.py and tools/scale_probe.py sample
+    through here too, so their numbers measure the same program."""
     from etl_fraud_detection_spark.operators.dedup import release_shingles
     from etl_fraud_detection_spark.operators.sampling import release_ranked
 
@@ -68,7 +70,7 @@ def _time_query(spark, name: str) -> float:
     release_ranked()
     spark.catalog.clearCache()
     t0 = time.perf_counter()
-    df = QUERIES[name].fn(spark, SF_DIR)
+    df = QUERIES[name].fn(spark, sf_dir)
     n = df.count()
     took = time.perf_counter() - t0
     print(f"# {name}: {took:.3f}s ({n} rows)", file=sys.stderr)
@@ -129,19 +131,14 @@ def main() -> None:
 
     # Warm the JVM + parquet footers once so per-query numbers measure the
     # engine, not first-touch JIT.
-    next(iter(QUERIES.values())).fn(spark, SF_DIR).count()
+    _time_query(spark, next(iter(QUERIES)))
     # Warm the STREAMING machinery too (state-store + micro-batch
     # execution classes + streaming codegen): the first drained stream
     # of a session pays ~6s of one-time init, and without this warmup
     # that cost lands inside sweep 1's sample of whichever streaming
     # query runs first — the round-7 q_stream_join 'weak' measurement
     # was exactly this cold sample polluting the median.
-    QUERIES["q_stream_join"].fn(spark, SF_DIR).count()
-    for view in _STREAM_VIEWS:
-        try:
-            spark.catalog.dropTempView(view)
-        except Exception:
-            pass
+    _time_query(spark, "q_stream_join")
 
     _canary(spark), _canary(spark)  # warm codegen + JIT, uncounted
     # Each sweep is bracketed by canary samples; a sweep whose bracket

@@ -979,7 +979,7 @@ def _rotate_queries_local(
     same-boot interleaved A/B confirmed the collect path is the slower
     one at fixture scale (q_ann_opq_ivf 3.07 s driver-side vs 2.45 s
     Arrow; q_ann_opq_index 1.98 vs 1.80; medians of 6 interleaved
-    samples — OPTIMIZATION_r16.md §2): the eager collect +
+    samples — commit b42adcb): the eager collect +
     local-relation rebuild costs more wall time than the Arrow node it
     removed, and since the rotation only ever touches the bounded
     query set, the Python round trip it reintroduces is

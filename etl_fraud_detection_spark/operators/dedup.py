@@ -99,8 +99,8 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n:
     # replaces evaluates INTERPRETED per element even with every
     # reference bound (higher-order-function lambdas never enter
     # codegen — the r14 rotate_vecs finding); measured 2.0x on the
-    # full shingle+md5 pass (0.87 -> 0.44 s at sf0.1, tools/probe_r15
-    # hof mode; Arrow mapInPandas sat between at 0.64 s).
+    # full shingle+md5 pass (0.87 -> 0.44 s at sf0.1, commit 64a1832
+    # and SCALE.md r15; Arrow mapInPandas sat between at 0.64 s).
     from pyspark.ml.feature import NGram
 
     grams = NGram(n=n, inputCol="toks", outputCol="_grams").transform(toks)

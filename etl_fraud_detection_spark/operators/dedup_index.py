@@ -53,7 +53,7 @@ T_BANDS = "nd_bands"
 # (Warehouse.table_bytes — driver-side file stats, no Spark job), not
 # off the batch key count, which says nothing about what the filter
 # saves. Threshold MEASURED (SCALE.md r15 "band-probe crossover",
-# tools/probe_r15.py crossover mode): on this host (local NVMe, 32
+# commit 64a1832): on the measuring host (local NVMe, 32
 # cores, hot page cache) the unfiltered probe wins wall time at EVERY
 # ledger size tried up to 1.8 GB / ~90M shingle rows — the linear
 # ledger read parallelizes to ~nothing while the filters' eager

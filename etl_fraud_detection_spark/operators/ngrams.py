@@ -79,7 +79,7 @@ def ngram_rows(
     byte-identical grams to :func:`ngram_array`'s transform form, which
     stays for Column-level composition but evaluates its lambda
     INTERPRETED per element (measured 2x on the shingle pass,
-    tools/probe_r15 hof mode; the dedup.shingles rationale). NGram
+    commit 64a1832; the dedup.shingles rationale). NGram
     NPEs on a NULL token array, so NULL text coalesces to the empty
     array first — same output as the guarded transform (empty gram
     array; one NULL-gram row under ``outer``)."""

@@ -8,6 +8,12 @@ its bottom so a single import triggers the full registry).
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import (
@@ -26,23 +32,46 @@ from ..operators import (
 from .queries import QUERIES, _t, query
 
 
+def _fixture_root(sf_dir: str, tables: list[str], kind: str) -> str:
+    """Temp-dir root of a build-once fixture, content-addressed: the
+    directory name hashes each source table's path+mtime+size plus the
+    site's ``kind`` (name and layout version), so a regenerated source
+    or a bumped version lands in a fresh root instead of reusing a
+    stale build. Each caller keeps its own build/marker logic."""
+    key = [kind]
+    for tbl in tables:
+        src = os.path.join(sf_dir, f"{tbl}.parquet")
+        st = os.stat(src)
+        key.append(f"{src}:{st.st_mtime_ns}:{st.st_size}")
+    tag = hashlib.md5(":".join(key).encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_{tag}")
+
+
 def _built_once(root: str, probe: str, build_fn) -> None:
     """Build-once-per-source marker with a LIVENESS check: the marker
     counts only if the probed table's _CURRENT pointer still exists
     under the warehouse root — /tmp reaping can remove the parquet
     while the tiny marker file survives, and trusting the marker alone
     would hand the query an empty index (the stale-marker hazard the
-    bucketed-join reuse guard closes the same way, operators/joins.py)."""
-    import os
-    import shutil
-
+    bucketed-join reuse guard closes the same way, operators/joins.py).
+    The check -> build -> mark sequence runs under an exclusive lock on
+    ``root + ".lock"``: two processes sharing the temp dir would
+    otherwise rmtree each other's half-built fixture."""
     marker = os.path.join(root, ".built")
-    if os.path.exists(marker) and os.path.exists(os.path.join(root, probe)):
+
+    def built() -> bool:
+        return os.path.exists(marker) and os.path.exists(os.path.join(root, probe))
+
+    if built():
         return
-    shutil.rmtree(root, ignore_errors=True)
-    build_fn()
-    with open(marker, "w") as fh:
-        fh.write("ok")
+    with open(root + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if built():  # another process finished it while we waited
+            return
+        shutil.rmtree(root, ignore_errors=True)
+        build_fn()
+        with open(marker, "w") as fh:
+            fh.write("ok")
 
 
 # ---------------------------------------------------------------------------
@@ -399,23 +428,13 @@ def q_dedup_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-only ingest leaves it pristine, so repeated runs measure the
     operator's actual incremental cost — the probe — and the returned
     plan stays inspectable (no eager checkpoint)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..operators import dedup_index
     from ..pipeline import Warehouse
 
     docs = _t(spark, sf_dir, "documents")
     batch = docs.where(F.col("doc_id") % 10 == 0)
     ledger = docs.where(F.col("doc_id") % 10 != 0)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:v2".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ndindex_{tag}")
+    root = _fixture_root(sf_dir, ["documents"], "ndindex_v2")
     _built_once(
         root, "index/nd_bands/_CURRENT",
         lambda: dedup_index.build(Warehouse(spark, root), ledger, run_id=1),
@@ -700,20 +719,11 @@ def _pq_warehouse(spark: SparkSession, sf_dir: str):
     """Shared PQ index warehouse: built ONCE per source version (the
     band/IVF-index marker discipline) with the deterministic lowest-id
     codebook, then opened read-only."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:pq1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_pqindex_{tag}")
+    root = _fixture_root(sf_dir, ["embeddings"], "pqindex_v1")
     _built_once(
         root, "index/pq_codes/_CURRENT",
         lambda: ann_index.pq_build(
@@ -1084,20 +1094,11 @@ def q_ann_opq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     aren't oracle-expressible); bit-equality of the stored path
     against the session operator and the stored-rotation ingest
     contract are pinned in tests/test_ann_index.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:opq2".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_opq_{tag}")
+    root = _fixture_root(sf_dir, ["embeddings"], "opq_v2")
     _built_once(
         root, "index/opq_codes/_CURRENT",
         lambda: ann_index.opq_build(
@@ -1139,20 +1140,11 @@ def q_ann_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stored codes. Same oracle as q_ann_ivfpq_residual: the stored
     path must reproduce the session operator bit-for-bit while
     re-encoding nothing."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:ivfpqres2".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ivfpqres_{tag}")
+    root = _fixture_root(sf_dir, ["embeddings"], "ivfpqres_v2")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(
@@ -1167,20 +1159,11 @@ def q_ann_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_warehouse(spark: SparkSession, sf_dir: str):
     """Shared IVFADC index warehouse: built ONCE per source version
     (the band/IVF/PQ-index marker discipline), then opened read-only."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:ivfpq2".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ivfpq_{tag}")
+    root = _fixture_root(sf_dir, ["embeddings"], "ivfpq_v2")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(
@@ -1306,20 +1289,11 @@ def q_ann_opq_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the permuted vectors); production swaps in the trained PCA
     rotation via the same parameter, pinned bit-equal in
     tests/test_ann_index.py."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:opqivf1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_opqivf_{tag}")
+    root = _fixture_root(sf_dir, ["embeddings"], "opqivf_v1")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(
@@ -1433,21 +1407,12 @@ def _ivf_warehouse(spark: SparkSession, sf_dir: str):
     ONCE per source version (marker keyed by the embeddings table's
     path+mtime+size — the band-index discipline) with the deterministic
     lowest-id quantizer, then opened read-only."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..operators import ann_index
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:v2".encode()  # v2: cid-partitioned layout
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ivfindex_{tag}")
+    # v2: cid-partitioned layout
+    root = _fixture_root(sf_dir, ["embeddings"], "ivfindex_v2")
     _built_once(
         root, "index/ivf_assign/_CURRENT",
         lambda: ann_index.build(
@@ -2415,25 +2380,18 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     one registers the existing files and measures the zero-exchange
     probe — the cost profile a user of ingest-once bucketing actually
     sees."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators.joins import write_bucketed
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
 
-    def _token(tbl: str) -> str:
-        st = os.stat(os.path.join(sf_dir, f"{tbl}.parquet"))
-        return f"{tbl}:{st.st_mtime_ns}:{st.st_size}:v1"
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_buckets_{tag}")
+    # the root is content-addressed, so it doubles as the reuse token
+    base = _fixture_root(sf_dir, ["lineitem", "orders"], "buckets_v1")
+    tag = base.rsplit("_", 1)[-1]
     write_bucketed(li, f"bkt_lineitem_{tag}", ["l_orderkey"], 8, base + "/li",
-                   reuse_token=_token("lineitem"))
+                   reuse_token=base)
     write_bucketed(o, f"bkt_orders_{tag}", ["o_orderkey"], 8, base + "/o",
-                   reuse_token=_token("orders"))
+                   reuse_token=base)
     bl = spark.table(f"bkt_lineitem_{tag}").hint("merge")
     bo = spark.table(f"bkt_orders_{tag}").hint("merge")
     j = bl.join(bo, bl["l_orderkey"] == bo["o_orderkey"])
@@ -2465,17 +2423,9 @@ def q_layout_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one day of files, not a month (plan-pinned in
     tests/test_plans.py). Values equal the unpartitioned oracle; the
     layout changes what is READ, never what is computed."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..catalog import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:hyper:v1".encode()
-    ).hexdigest()[:12]
-    p = os.path.join(tempfile.gettempdir(), f"spark_graft_hypertable_{tag}")
+    p = _fixture_root(sf_dir, ["events"], "hypertable_v1")
     if not os.path.exists(os.path.join(p, "_SUCCESS")):
         ev = load_table(spark, sf_dir, "events")
         (
@@ -3592,17 +3542,8 @@ def _bench_gram_store(spark: SparkSession, sf_dir: str) -> str:
     distinct 4-grams — the STATIC side both decontamination queries
     (batch q_contamination, streaming q_stream_contamination) broadcast
     against. One shared builder so the two can never drift apart."""
-    import hashlib
-    import os
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:grams4:v1".encode()
-    ).hexdigest()[:12]
-    bg_path = os.path.join(tempfile.gettempdir(), f"spark_graft_benchgrams_{tag}")
+    bg_path = _fixture_root(sf_dir, ["documents"], "benchgrams_v1")
     if not os.path.exists(os.path.join(bg_path, "_SUCCESS")):
         ngrams.ngram_rows(
             docs.where(F.col("doc_id") % 50 == 0), "text", 4, distinct=True
@@ -3671,29 +3612,19 @@ def q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     same per-micro-batch hit frame feeds a quarantine sink directly —
     each doc's grams ride in its own batch, so the verdict is
     batch-local). Must equal the batch contamination report."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..streaming.rules import _drain_append
 
     bg_path = _bench_gram_store(spark, sf_dir)
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:grams4:v1".encode()
-    ).hexdigest()[:12]
 
     # stream the train docs from a linked drop-directory
-    sdir = os.path.join(tempfile.gettempdir(), f"spark_graft_stream_docs_{tag}")
+    sdir = _fixture_root(sf_dir, ["documents"], "stream_docs_v1")
     if not os.path.exists(os.path.join(sdir, "documents.parquet")):
         os.makedirs(sdir, exist_ok=True)
         try:
             os.link(src, os.path.join(sdir, "documents.parquet"))
         except OSError:  # cross-device fallback
-            import shutil as _sh
-
-            _sh.copy(src, os.path.join(sdir, "documents.parquet"))
+            shutil.copy(src, os.path.join(sdir, "documents.parquet"))
     schema = spark.read.parquet(src).schema
     train = (
         spark.readStream.schema(schema).parquet(sdir)
@@ -5996,20 +5927,10 @@ def _diff_warehouse(spark: SparkSession, sf_dir: str):
     drops doc_id%13==7, revises text of doc_id%11==5), each under the
     atomic multi-table commit. Built once per source version (marker
     keyed on the documents file's path+mtime+size)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..pipeline import Warehouse
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:corpusdiff_v1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_corpusdiff_{tag}")
+    root = _fixture_root(sf_dir, ["documents"], "corpusdiff_v1")
 
     def _build():
         wh = Warehouse(spark, root)
@@ -6074,21 +5995,11 @@ def _bm25_warehouse(spark: SparkSession, sf_dir: str):
     once per source version (marker keyed by the documents file's
     path+mtime+size — the band-index/IVF discipline), then opened
     read-only."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from ..operators import text_index
     from ..pipeline import Warehouse
 
     docs = _t(spark, sf_dir, "documents")
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:bm25index_v1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_bm25index_{tag}")
+    root = _fixture_root(sf_dir, ["documents"], "bm25index_v1")
     _built_once(
         root, "index/postings/_CURRENT",
         lambda: text_index.build(Warehouse(spark, root), docs, run_id=1),
@@ -6713,21 +6624,11 @@ def q_corpus_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMMITTED warehouse tables — survivors joined to their shard
     assignments — so the oracle verifies what a training job would
     actually mount, not an in-flight plan."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import corpus_build
     from ..pipeline import Warehouse
 
     torn = _torn_pages(spark, sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:corpusfull_v1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_corpusfull_{tag}")
-    wh = Warehouse(spark, root)
+    wh = Warehouse(spark, _fixture_root(sf_dir, ["documents"], "corpusfull_v1"))
     corpus_build.build_corpus(wh, torn, run_id=1, tau=0.8, target_tokens=2048)
     surv = wh.read("corpus", "survivors")
     shards = wh.read("export", "training_shards").select(
@@ -6843,6 +6744,26 @@ def _admit_oracle(clones: bool = False) -> str:
     """
 
 
+def _corpus_admit_wh(spark: SparkSession, sf_dir: str):
+    """The committed corpus both admission queries judge batches
+    against: built once per source version from the doc_id%10!=0 torn
+    pages (survivors + band ledger), then opened read-only."""
+    from ..operators import corpus_build
+    from ..pipeline import Warehouse
+
+    root = _fixture_root(sf_dir, ["documents"], "corpusadmit_v1")
+
+    def _build():
+        pages = _torn_pages(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
+        corpus_build.build_corpus(
+            Warehouse(spark, root), pages, run_id=1, tau=0.8,
+            target_tokens=2048, with_ledger=True,
+        )
+
+    _built_once(root, "corpus/survivors/_CURRENT", _build)
+    return Warehouse(spark, root)
+
+
 @query("q_corpus_admit", oracle=_admit_oracle())
 def q_corpus_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus ADMISSION — the daily-crawl path: a new
@@ -6860,29 +6781,9 @@ def q_corpus_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_corpus_build.py.
     Reference analog: the watermark-incremental extract discipline of
     etl.py:190-199 applied to corpus membership."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import corpus_build
-    from ..pipeline import Warehouse
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:corpusadmit_v1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_corpusadmit_{tag}")
-
-    def _build():
-        wh = Warehouse(spark, root)
-        pages = _torn_pages(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
-        corpus_build.build_corpus(
-            wh, pages, run_id=1, tau=0.8, target_tokens=2048, with_ledger=True
-        )
-
-    _built_once(root, "corpus/survivors/_CURRENT", _build)
-    wh = Warehouse(spark, root)
+    wh = _corpus_admit_wh(spark, sf_dir)
     batch = _torn_pages(spark, sf_dir).where(F.col("doc_id") % 10 == 0)
     return corpus_build.admission_verdicts(wh, batch, tau=0.8)
 
@@ -6902,29 +6803,9 @@ def q_corpus_admit_intra(spark: SparkSession, sf_dir: str) -> DataFrame:
     holdout splits: train/test contamination. Oracle: the full
     closed-form cascade with the clone construction replayed in SQL.
     Shares q_corpus_admit's committed warehouse (read-only probes)."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators import corpus_build
-    from ..pipeline import Warehouse
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_mtime_ns}:{st.st_size}:corpusadmit_v1".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_corpusadmit_{tag}")
-
-    def _build():
-        wh = Warehouse(spark, root)
-        pages = _torn_pages(spark, sf_dir).where(F.col("doc_id") % 10 != 0)
-        corpus_build.build_corpus(
-            wh, pages, run_id=1, tau=0.8, target_tokens=2048, with_ledger=True
-        )
-
-    _built_once(root, "corpus/survivors/_CURRENT", _build)
-    wh = Warehouse(spark, root)
+    wh = _corpus_admit_wh(spark, sf_dir)
     base = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
     clones = base.select(
         (F.col("doc_id") + F.lit(_CLONE_OFF)).alias("doc_id"),

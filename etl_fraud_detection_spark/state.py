@@ -70,10 +70,16 @@ class RunLog:
         self.path = path
 
     def _existing(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        """The logged runs, or None when there are none yet: the
+        directory is missing or holds no part file (as a first run
+        rolled back by Warehouse.recover() leaves it). Any other read
+        error propagates — a corrupt log must not restart the run-id
+        sequence at 1 and collide with the runs it hides."""
+        if not os.path.isdir(self.path) or not any(
+            f.endswith(".parquet") for f in os.listdir(self.path)
+        ):
             return None
+        return self.spark.read.parquet(self.path)
 
     def next_run_id(self) -> int:
         cur = self._existing()

@@ -5,11 +5,12 @@ skip-guard idempotency."""
 import os
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_fraud_detection_spark import pipeline
 from etl_fraud_detection_spark.sources import files as fsrc
-from etl_fraud_detection_spark.state import WatermarkStore
+from etl_fraud_detection_spark.state import RunLog, WatermarkStore
 
 TX_HEADER = "transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"
 
@@ -186,3 +187,26 @@ def test_compact_small_files(spark, tmp_path):
     after = wh.read("stg", "items")
     assert n_files == 1  # tiny table -> one block-sized file
     assert sorted(r.id for r in after.collect()) == rows_before
+
+
+def test_run_log_absent_vs_corrupt(spark, tmp_path):
+    """A missing or part-less log directory (what recover() leaves after
+    rolling back a first run) starts the run-id sequence at 1; a log
+    whose part files are corrupt raises instead of restarting at 1 and
+    colliding with the runs it hides."""
+    empty = tmp_path / "empty_log"
+    empty.mkdir()
+    assert RunLog(spark, str(empty)).next_run_id() == 1
+    assert RunLog(spark, str(tmp_path / "missing")).next_run_id() == 1
+
+    log_dir = tmp_path / "run_log"
+    log = RunLog(spark, str(log_dir))
+    for run_id in (1, 2, 3):
+        log.append(run_id, "dwh_transactions")
+    assert log.next_run_id() == 4
+    parts = list(log_dir.glob("*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        log.next_run_id()
