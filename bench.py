@@ -51,12 +51,6 @@ from etl_fraud_detection_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
-_STREAM_VIEWS = (
-    "stream_win_agg", "stream_sliding_agg", "stream_rule3", "stream_rule4",
-    "stream_dedup", "stream_sessions", "stream_asof", "stream_join",
-    "stream_join_outer", "stream_fraud1",
-)
-
 
 def _time_query(spark, name: str, sf_dir: str = SF_DIR) -> float:
     """One bench sample of one query at ``sf_dir``: clean cache + drained
@@ -76,14 +70,15 @@ def _time_query(spark, name: str, sf_dir: str = SF_DIR) -> float:
     print(f"# {name}: {took:.3f}s ({n} rows)", file=sys.stderr)
     # Free memory-sink tables of drained streaming queries — a
     # "complete"-mode sink pins its rows on the driver and skews the
-    # next query's timing.
-    dropped = False
-    for view in _STREAM_VIEWS:
-        try:
-            dropped = spark.catalog.dropTempView(view) or dropped
-        except Exception:
-            pass
-    if dropped:
+    # next query's timing. Every catalog sink is named stream_*; the
+    # prefix also catches sinks added later.
+    views = [
+        t.name for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("stream_")
+    ]
+    for view in views:
+        spark.catalog.dropTempView(view)
+    if views:
         # reclaim the sink rows now, not during the next measurement
         spark.sparkContext._jvm.System.gc()
     return took

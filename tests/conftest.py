@@ -3,8 +3,7 @@ import sys
 
 import pytest
 
-_TESTS = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_TESTS))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_fraud_detection_spark.session import get_spark
 
@@ -15,16 +14,6 @@ def spark():
     # The suite's data fits in a few GB, and with 32g the JVM grows past
     # a 16 GB host's memory before it collects.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
-    # Fork Python workers from a daemon that has pandas and pyarrow
-    # loaded (see spark_worker_daemon.py). Workers find the module through
-    # PYTHONPATH, which the JVM passes on to them.
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (_TESTS, os.environ.get("PYTHONPATH")) if p
-    )
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--conf spark.python.daemon.module=spark_worker_daemon "
-        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
-    )
     s = get_spark("pytest", cpus=8, shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s

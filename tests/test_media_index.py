@@ -4,8 +4,6 @@ admissions GROW the ledger — a batch-N+1 twin of a blob admitted in
 batch N must reject against the stored index, with the original corpus
 long out of scope. Mirrors tests/test_dedup_index.py for media."""
 
-import shutil
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -45,23 +43,6 @@ def wh(spark, tmp_path):
     return Warehouse(spark, str(tmp_path / "mdwh"))
 
 
-@pytest.fixture(scope="module")
-def png_ledger(spark, tmp_path_factory):
-    """A ledger built once per module from one image (media 1, pattern
-    0) at run 1 — the starting state most tests share. Warehouse paths
-    are relative to its root, so a copy of the tree is that ledger."""
-    root = str(tmp_path_factory.mktemp("png_ledger") / "mdwh")
-    media_index.build(
-        Warehouse(spark, root), _media(spark, [_png_row(1, 0)]), run_id=1
-    )
-    return root
-
-
-def _build_png_ledger(wh, png_ledger):
-    """Same state as ``media_index.build(wh, [png 1], run_id=1)``."""
-    shutil.copytree(png_ledger, wh.root)
-
-
 def _verdicts(adm):
     return {
         r.media_id: (r.admitted, r.dup_of, r.via)
@@ -70,16 +51,14 @@ def _verdicts(adm):
 
 
 class TestLedgerGrows:
-    def test_image_admitted_in_batch_n_rejects_twin_in_batch_n1(
-        self, spark, wh, png_ledger
-    ):
+    def test_image_admitted_in_batch_n_rejects_twin_in_batch_n1(self, spark, wh):
         # preconditions pinned from the hash definitions themselves
         assert bin(ahash_64(W, H, 1, _img_px(0))
                    ^ ahash_64(W, H, 1, _img_px(0, bump=17))).count("1") <= 3
         assert bin(ahash_64(W, H, 1, _img_px(0))
                    ^ ahash_64(W, H, 1, _img_px(5))).count("1") > 3
 
-        _build_png_ledger(wh, png_ledger)
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         # batch 1: image 10 (pattern 5) is NEW; 11 twins ledger image 1
         got = _verdicts(media_index.ingest(
             wh, _media(spark, [_png_row(10, 5), _png_row(11, 0, bump=17)]),
@@ -127,15 +106,13 @@ class TestLedgerGrows:
 
 
 class TestIntraBatch:
-    def test_same_batch_near_dup_pair_admits_exactly_one(
-        self, spark, wh, png_ledger
-    ):
+    def test_same_batch_near_dup_pair_admits_exactly_one(self, spark, wh):
         """Two near-dup images arriving in the SAME batch: the ledger
         probe passes both (it only sees stored blobs), so the
         intra-batch stage must keep exactly one — largest payload,
         smallest id on ties — and point the loser at the in-batch
         winner."""
-        _build_png_ledger(wh, png_ledger)
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         p10, p11 = _png_row(10, 5), _png_row(11, 5, bump=17)
         # survivor policy is payload size then id — compute the expected
         # winner from the actual encoded bytes
@@ -166,11 +143,11 @@ class TestIntraBatch:
         ))
         assert got2[20][0] is False and got2[20][1] == win
 
-    def test_ledger_hit_outranks_intra_batch_pair(self, spark, wh, png_ledger):
+    def test_ledger_hit_outranks_intra_batch_pair(self, spark, wh):
         """A blob near-dupping BOTH the ledger and a batchmate reports
         the ledger partner (it never reaches the intra-batch stage);
         its batchmate — also a ledger near-dup here — likewise."""
-        _build_png_ledger(wh, png_ledger)
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         got = _verdicts(media_index.ingest(
             wh,
             _media(spark, [_png_row(10, 0, bump=17), _png_row(11, 0, bump=22)]),
@@ -181,8 +158,8 @@ class TestIntraBatch:
 
 
 class TestExactlyOnce:
-    def test_replay_is_idempotent(self, spark, wh, png_ledger):
-        _build_png_ledger(wh, png_ledger)
+    def test_replay_is_idempotent(self, spark, wh):
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         batch = _media(spark, [
             _png_row(10, 5),
             (11, "bin", 0, 0, b"undecodable payload"),  # admits, no hashes
@@ -202,8 +179,8 @@ class TestExactlyOnce:
         for t, n in counts.items():
             assert wh.read("index", t).count() == n, t
 
-    def test_rejected_blob_never_pollutes_ledger(self, spark, wh, png_ledger):
-        _build_png_ledger(wh, png_ledger)
+    def test_rejected_blob_never_pollutes_ledger(self, spark, wh):
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         media_index.ingest(
             wh, _media(spark, [_png_row(10, 0, bump=17)]), run_id=2
         )
@@ -214,8 +191,8 @@ class TestExactlyOnce:
         ))
         assert got[20] == (False, 1, "image")
 
-    def test_readonly_mode_leaves_ledger_pristine(self, spark, wh, png_ledger):
-        _build_png_ledger(wh, png_ledger)
+    def test_readonly_mode_leaves_ledger_pristine(self, spark, wh):
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         p = wh.path("index", media_index.T_ADMITTED)
         v = wh._current(p)
         got = _verdicts(media_index.ingest(
@@ -225,8 +202,8 @@ class TestExactlyOnce:
         assert wh._current(p) == v
         assert wh.read("index", media_index.T_ADMITTED).count() == 1
 
-    def test_commit_requires_run_id(self, spark, wh, png_ledger):
-        _build_png_ledger(wh, png_ledger)
+    def test_commit_requires_run_id(self, spark, wh):
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         with pytest.raises(ValueError, match="run_id"):
             media_index.ingest(wh, _media(spark, [_png_row(10, 5)]))
 
@@ -246,10 +223,8 @@ class TestContracts:
                   media_index.T_FRAMES, media_index.T_ADMITTED):
             assert tables.get(f"index/{t}") is not None, t
 
-    def test_crash_mid_ingest_rolls_all_tables_back(
-        self, spark, wh, png_ledger, monkeypatch
-    ):
-        _build_png_ledger(wh, png_ledger)
+    def test_crash_mid_ingest_rolls_all_tables_back(self, spark, wh, monkeypatch):
+        media_index.build(wh, _media(spark, [_png_row(1, 0)]), run_id=1)
         before = {
             t: wh.read("index", t).count()
             for t in (media_index.T_HASHES, media_index.T_BANDS,
