@@ -10,6 +10,12 @@ Reproduces the reference lifecycle (etl.py:132-284, main.py:14-18):
                   detection → same SCD path
     mart_update : fraud_report() increment appended to the report
 
+The steps log into one buffer of run-log rows (the reference logs each
+step with the row count of its SQL statement, etl.py:108-130);
+run_daily writes the buffer in one job just before the commit. The
+counts come from the footers of the files each write added, so they add
+no Spark job either.
+
 Storage is a three-layer parquet warehouse (stg/dwh/rep) with versioned
 tables. SCD merges read and logically overwrite the same table; parquet
 can't do that in-place, so Warehouse.overwrite materializes a new
@@ -34,17 +40,18 @@ partitionBy) so the report's watermark filter prunes partitions.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
-from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .mapping import MAPPINGS, TableMapping
 from .operators.scd import scd1_merge, scd2_merge
 from .plans.fraud import fraud_report
 from .sources import files as fsrc
-from .state import RunLog, WatermarkStore
+from .state import RunLog, RunRows, WatermarkStore
 
 FILE_TEMPLATES = ["transactions_*.txt", "passport_blacklist_*.xlsx", "terminals_*.xlsx",
                   "transactions_*.csv", "passport_blacklist_*.csv", "terminals_*.csv"]
@@ -98,6 +105,18 @@ class Warehouse:
     manifest-of-immutable-files design Delta/Iceberg use on object
     storage; on a real cluster you'd swap this class for a Delta/Iceberg
     table and keep every call site unchanged.
+
+    Bookkeeping costs no Spark job of its own. :meth:`overwrite` and
+    :meth:`append` return the rows written, summed from the footers of
+    the files they added.
+    A version records its schema in a ``_SCHEMA`` marker whenever the
+    writer knows it without inference (an unpartitioned overwrite, an
+    append that creates the table or adds the same columns to a version
+    that records them, an adopt of a version that records them, any
+    version without data files), so :meth:`read` starts no
+    schema-inference job.
+    Partitioned versions with data keep inference, which types the
+    partition columns from their directory names.
 
     Multi-table atomicity (the reference's single ``conn.commit`` per
     run spanning all tables — database.py:34-40, etl.py:127-130) comes
@@ -268,42 +287,76 @@ class Warehouse:
             )
         return total
 
-    def _read_vdir(self, vdir: str) -> DataFrame:
-        """Read one version directory. A version holding ZERO data
-        files (an empty PARTITIONED write emits no parquet at all —
-        e.g. a corpus whose train split gated out) carries its schema
-        in a ``_SCHEMA`` marker written by the writer, so the read
-        returns a correctly-typed empty frame instead of failing
-        schema inference."""
+    @staticmethod
+    def _recorded_schema(vdir: str) -> StructType | None:
+        """The schema a version's writer recorded in its ``_SCHEMA``
+        marker, or None when it recorded none."""
         sf = os.path.join(vdir, "_SCHEMA")
-        if os.path.exists(sf):
-            import json
+        if not os.path.exists(sf):
+            return None
+        with open(sf) as fh:
+            return StructType.fromJson(json.load(fh))
 
-            from pyspark.sql.types import StructType
+    def _read_vdir(self, vdir: str) -> DataFrame:
+        """Read one version directory, with the schema its writer
+        recorded in ``_SCHEMA`` when there is one. That read starts no
+        Spark job; schema inference (the fallback, for partitioned
+        versions and versions written before markers) runs one. A
+        version holding ZERO data files (an empty PARTITIONED write
+        emits no parquet at all — e.g. a corpus whose train split gated
+        out) always carries the marker, because inference would fail."""
+        schema = self._recorded_schema(vdir)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(vdir)
 
-            with open(sf) as fh:
-                schema = StructType.fromJson(json.load(fh))
-            return self.spark.read.schema(schema).parquet(vdir)
-        return self.spark.read.parquet(vdir)
+    def _mark_schema(
+        self, tmp: str, df: DataFrame, partition_by: list[str] | None,
+        known: StructType | None,
+    ) -> None:
+        """Write the staged version's ``_SCHEMA`` marker. A version
+        holding no data files records ``df``'s schema. A partitioned
+        version with files records none: inference types its partition
+        columns from the directory names (a bigint ``cid`` reads back as
+        int, ``timestamp_ntz`` as ``timestamp``), and a recorded schema
+        would change those types. Any other version records ``known``,
+        the schema the writer has without inference, if there is one."""
+        if not self._parquet_files(tmp):
+            known = df.schema
+        elif partition_by:
+            known = None
+        if known is not None:
+            _atomic_write(os.path.join(tmp, "_SCHEMA"), known.json())
 
     @staticmethod
-    def _has_parquet(d: str) -> bool:
-        return any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(d)
+    def _parquet_files(d: str) -> set[str]:
+        return {
+            os.path.relpath(os.path.join(r, f), d)
+            for r, _d, fs in os.walk(d)
             for f in fs
-        )
+            if f.endswith(".parquet")
+        }
 
-    def _mark_schema(self, tmp: str, df: DataFrame) -> None:
-        """Reconcile the ``_SCHEMA`` marker with the staged version:
-        written when the version holds no data files, removed once real
-        files exist (the files are then the schema authority)."""
-        sf = os.path.join(tmp, "_SCHEMA")
-        if self._has_parquet(tmp):
-            if os.path.exists(sf):
-                os.remove(sf)
-        else:
-            _atomic_write(sf, df.schema.json())
+    def _write_counted(
+        self, df: DataFrame, mode: str, partition_by: list[str] | None, path: str
+    ) -> int:
+        """Write ``df`` as parquet into ``path`` and return the rows
+        written, summed from the footers of the files the write added —
+        driver-side metadata reads, not a second Spark job. (An
+        ``Observation`` would count in the write job, but on Spark 4.1 it
+        leaves the session unserializable, and any closure capturing the
+        session then fails: MLlib's LogisticRegressionModel.transform
+        does, through its training summary.)"""
+        import pyarrow.parquet as pq
+
+        before = self._parquet_files(path)
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path)
+        return sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in self._parquet_files(path) - before
+        )
 
     # -- writers ------------------------------------------------------------
 
@@ -342,12 +395,8 @@ class Warehouse:
         tmp = vdir + ".__tmp__"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        self._mark_schema(tmp, df)
-        n = self._read_vdir(tmp).count()
+        n = self._write_counted(df, "overwrite", partition_by, tmp)
+        self._mark_schema(tmp, df, partition_by, df.schema)
         if os.path.exists(vdir):
             # Orphan from a crash between os.replace and _set_current's
             # journal write: any version > _CURRENT that no committed
@@ -388,14 +437,16 @@ class Warehouse:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         os.makedirs(tmp)
+        known = df.schema
         if cur is not None:
             _link_tree(self._vdir(p, cur), tmp)
-        n = df.count()
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        self._mark_schema(tmp, df)
+            # the current version's recorded schema still describes the
+            # union only when the increment has the same columns and types
+            known = self._recorded_schema(self._vdir(p, cur))
+            if known is not None and known.simpleString() != df.schema.simpleString():
+                known = None
+        n = self._write_counted(df, "append", partition_by, tmp)
+        self._mark_schema(tmp, df, partition_by, known)
         if os.path.exists(vdir):
             # same crash-orphan case as overwrite(): unreachable stale dir
             shutil.rmtree(vdir)
@@ -430,11 +481,11 @@ class Warehouse:
             shutil.rmtree(tmp)
         os.makedirs(tmp)
         _link_tree(self._vdir(sp, sv), tmp)
-        # _link_tree skips marker files; a source version holding ZERO
-        # parquet files carries its schema only in _SCHEMA, so carry the
-        # marker over or the adopted version fails schema inference.
+        # _link_tree skips marker files; the adopted version holds the
+        # source's files, so the source's _SCHEMA describes it too (and
+        # a source holding ZERO parquet files would fail inference)
         src_schema = os.path.join(self._vdir(sp, sv), "_SCHEMA")
-        if not self._has_parquet(tmp) and os.path.exists(src_schema):
+        if os.path.exists(src_schema):
             shutil.copyfile(src_schema, os.path.join(tmp, "_SCHEMA"))
         if os.path.exists(vdir):
             shutil.rmtree(vdir)
@@ -466,8 +517,6 @@ class Warehouse:
         )
 
     def _manifest(self, run_id: int) -> dict:
-        import json
-
         with open(os.path.join(self._commits_dir(), f"{run_id}.json")) as fh:
             return json.load(fh)
 
@@ -499,8 +548,6 @@ class Warehouse:
         return self._read_vdir(vdir)
 
     def _flush_journal(self) -> None:
-        import json
-
         j = self._journal
         _atomic_write(
             os.path.join(self._commits_dir(), f"{j['run_id']}.inprogress.json"),
@@ -552,8 +599,6 @@ class Warehouse:
         run back; after it, the run is durable as a unit. Old versions
         superseded in this run are pruned afterwards (data files they
         share with the live version survive via hardlinks)."""
-        import json
-
         j = self._journal
         assert j is not None and j["run_id"] == run_id
         manifest = {
@@ -601,7 +646,6 @@ class Warehouse:
         byte-exactly, and run-log files the crashed run appended are
         removed — the warehouse is exactly as of the last commit."""
         import glob as _glob
-        import json
 
         cj = self._commits_dir()
         inprog = sorted(_glob.glob(os.path.join(cj, "*.inprogress.json")))
@@ -739,11 +783,12 @@ def _merge_to_dwh(
     dwh = wh.read("dwh", m.dwh_table)
     cols = list(m.dwh_columns)
     keys = list(m.dwh_keys)
+    # a first load merges into an empty table, derived from stg with
+    # limit(0): the optimizer makes it an empty local relation, which
+    # runs no task (an empty createDataFrame would start Python workers)
     if m.scd == 1:
         if dwh is None:
-            dwh = wh.spark.createDataFrame(
-                [], stg.select(*cols, "create_dt").schema
-            ).select(
+            dwh = stg.select(*cols, "create_dt").limit(0).select(
                 "*",
                 F.lit(None).cast("timestamp_ntz").alias("update_dt"),
                 F.lit(None).cast("timestamp_ntz").alias("processed_dt"),
@@ -751,7 +796,7 @@ def _merge_to_dwh(
         merged = scd1_merge(dwh, stg, keys, cols, now=now)
     elif m.scd == 2:
         if dwh is None:
-            dwh = wh.spark.createDataFrame([], stg.select(*cols).schema).select(
+            dwh = stg.select(*cols).limit(0).select(
                 "*",
                 F.lit(None).cast("timestamp_ntz").alias("effective_from"),
                 F.lit(None).cast("timestamp_ntz").alias("effective_to"),
@@ -793,6 +838,23 @@ def ingest_file(spark: SparkSession, wh: Warehouse, wm: WatermarkStore, log: Run
     return True
 
 
+def _merge_staged(wh: Warehouse, wm: WatermarkStore, log: RunLog, m: TableMapping,
+                  name: str, stg: DataFrame, src_keys: DataFrame | None, run_id: int,
+                  now, today) -> None:
+    """The DB-source tail shared by both extract paths: stage the delta,
+    SCD-merge the staged table, advance the watermark to the delta's
+    latest change and log both tables."""
+    n_stg = wh.overwrite("stg", name, stg)
+    staged = wh.read("stg", name)
+    n_dwh = _merge_to_dwh(wh, m, staged, src_keys, now=now, today=today)
+    # max(create_dt) as a top-1 sort: one Spark job, where agg() runs two
+    newest = staged.select("create_dt").orderBy(F.desc_nulls_last("create_dt")).first()
+    if newest is not None and newest[0] is not None:
+        wm.advance(name, newest[0])
+    log.append(run_id, name, inserted=n_stg)
+    log.append(run_id, m.dwh_table, inserted=n_dwh)
+
+
 def ingest_table_snapshot(spark: SparkSession, wh: Warehouse, wm: WatermarkStore,
                           log: RunLog, name: str, src: DataFrame, run_id: int,
                           now=None, today=None) -> None:
@@ -808,17 +870,11 @@ def ingest_table_snapshot(spark: SparkSession, wh: Warehouse, wm: WatermarkStore
         .select(*m.stg_columns, eff_dt.alias("create_dt"))
     )
     stg = _rename_to_target(delta, m)
-    wh.overwrite("stg", name, stg)
-    stg = wh.read("stg", name)
     src_keys = src.selectExpr(
         *[f"{s} AS {t}" for s, t in zip(m.stg_keys, m.dwh_keys)]
     )
-    n_dwh = _merge_to_dwh(wh, m, stg, src_keys if m.scd == 2 else None, now=now, today=today)
-    new_wm = stg.agg(F.max("create_dt")).first()[0]
-    if new_wm is not None:
-        wm.advance(name, new_wm)
-    log.append(run_id, name, inserted=stg.count())
-    log.append(run_id, m.dwh_table, inserted=n_dwh)
+    _merge_staged(wh, wm, log, m, name, stg, src_keys if m.scd == 2 else None,
+                  run_id, now, today)
 
 
 def ingest_database(spark: SparkSession, wh: Warehouse, wm: WatermarkStore,
@@ -842,28 +898,19 @@ def ingest_database(spark: SparkSession, wh: Warehouse, wm: WatermarkStore,
         spark, url, table, m.stg_columns, wm.get(name), driver=driver, **kw
     )
     stg = _rename_to_target(delta, m)
-    wh.overwrite("stg", name, stg)
-    stg = wh.read("stg", name)
     if m.scd == 2:
         src_keys = jsrc.read_keys(spark, url, table, m.stg_keys, driver=driver).selectExpr(
             *[f"{s} AS {t}" for s, t in zip(m.stg_keys, m.dwh_keys)]
         )
     else:
         src_keys = None
-    n_dwh = _merge_to_dwh(wh, m, stg, src_keys, now=now, today=today)
-    new_wm = stg.agg(F.max("create_dt")).first()[0]
-    if new_wm is not None:
-        wm.advance(name, new_wm)
-    log.append(run_id, name, inserted=stg.count())
-    log.append(run_id, m.dwh_table, inserted=n_dwh)
+    _merge_staged(wh, wm, log, m, name, stg, src_keys, run_id, now, today)
 
 
 def mart_update(spark: SparkSession, wh: Warehouse, log: RunLog, run_id: int, now=None) -> int:
     """DWH → accumulating fraud report (reference etl.py:409-414)."""
     now = now if now is not None else F.current_timestamp().cast("timestamp_ntz")
     report = wh.read("rep", "rep_fraud")
-    if report is None:
-        report = spark.createDataFrame([], schema="report_dt date")
     tables = {
         t: wh.read("dwh", t)
         for t in ("fact_transaction", "dim_cards_hist", "dim_accounts_hist",
@@ -872,6 +919,12 @@ def mart_update(spark: SparkSession, wh: Warehouse, log: RunLog, run_id: int, no
     missing = [t for t, df in tables.items() if df is None]
     if missing:
         raise RuntimeError(f"mart_update before tables exist: {missing}")
+    if report is None:
+        # the first report is empty: an empty local relation (limit 0),
+        # which runs no task
+        report = tables["fact_transaction"].select(
+            F.lit(None).cast("date").alias("report_dt")
+        ).limit(0)
     inc = fraud_report(
         tables["fact_transaction"], tables["dim_cards_hist"],
         tables["dim_accounts_hist"], tables["dim_clients_hist"],
@@ -901,12 +954,16 @@ def run_daily(spark: SparkSession, data_dir: str, warehouse_dir: str,
     log = RunLog(spark, os.path.join(warehouse_dir, "meta", "run_log"))
     run_id = log.next_run_id()
     wh.begin_run(run_id)
+    # the steps log into one buffer, written in one job before the
+    # commit (recover() removes the log files of a run that crashed)
+    rows = RunRows(log)
     for f in fsrc.discover(data_dir, FILE_TEMPLATES):
-        ingest_file(spark, wh, wm, log, f, run_id, now=now, today=today, do_archive=do_archive)
+        ingest_file(spark, wh, wm, rows, f, run_id, now=now, today=today, do_archive=do_archive)
     for name, src in (db_tables or {}).items():
-        ingest_table_snapshot(spark, wh, wm, log, name, src, run_id, now=now, today=today)
+        ingest_table_snapshot(spark, wh, wm, rows, name, src, run_id, now=now, today=today)
     for name, kw in (jdbc_tables or {}).items():
-        ingest_database(spark, wh, wm, log, name, run_id=run_id, now=now, today=today, **kw)
-    mart_update(spark, wh, log, run_id, now=now)
+        ingest_database(spark, wh, wm, rows, name, run_id=run_id, now=now, today=today, **kw)
+    mart_update(spark, wh, rows, run_id, now=now)
+    rows.write()
     wh.commit_run(run_id)
     return run_id

@@ -15,6 +15,7 @@ import os
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 EPOCH = datetime(1800, 1, 1)  # default watermark (main.ddl:33)
 
@@ -79,7 +80,7 @@ class RunLog:
             f.endswith(".parquet") for f in os.listdir(self.path)
         ):
             return None
-        return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(self.SCHEMA).parquet(self.path)
 
     def next_run_id(self) -> int:
         cur = self._existing()
@@ -88,8 +89,8 @@ class RunLog:
         row = cur.selectExpr("max(run_id) AS m").first()
         return (row["m"] or 0) + 1
 
-    def append(
-        self,
+    @staticmethod
+    def row(
         run_id: int,
         table: str,
         deleted: int = 0,
@@ -97,9 +98,37 @@ class RunLog:
         inserted: int = 0,
         run_start: datetime | None = None,
         run_end: datetime | None = None,
-    ) -> None:
-        row = [(run_id, table, deleted, updated, inserted,
-                run_start or datetime.now(), run_end or datetime.now())]
-        self.spark.createDataFrame(row, schema=self.SCHEMA).write.mode(
-            "append"
-        ).parquet(self.path)
+    ) -> tuple:
+        """One log row in SCHEMA order."""
+        return (run_id, table, deleted, updated, inserted,
+                run_start or datetime.now(), run_end or datetime.now())
+
+    def append(self, *args, **kwargs) -> None:
+        """Append one row (the arguments of :meth:`row`)."""
+        self.write([self.row(*args, **kwargs)])
+
+    def write(self, rows: list[tuple]) -> None:
+        """Append ``rows`` in one Spark job. The frame is built from an
+        Arrow table, which plans as a local relation, so the write starts
+        no Python worker."""
+        import pyarrow as pa
+
+        schema = StructType.fromDDL(self.SCHEMA)
+        table = pa.Table.from_pylist([dict(zip(schema.fieldNames(), r)) for r in rows])
+        self.spark.createDataFrame(table, schema).write.mode("append").parquet(self.path)
+
+
+class RunRows:
+    """One run's log rows, gathered as the run's steps append them and
+    written by :meth:`write` in one job. It stands in for the
+    :class:`RunLog` those steps append to."""
+
+    def __init__(self, log: RunLog):
+        self.log = log
+        self.rows: list[tuple] = []
+
+    def append(self, *args, **kwargs) -> None:
+        self.rows.append(RunLog.row(*args, **kwargs))
+
+    def write(self) -> None:
+        self.log.write(self.rows)

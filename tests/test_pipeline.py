@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from etl_fraud_detection_spark import pipeline
 from etl_fraud_detection_spark.sources import files as fsrc
 from etl_fraud_detection_spark.state import RunLog, WatermarkStore
+from tests.test_storage_layout import jobs_started
 
 TX_HEADER = "transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"
 
@@ -83,12 +84,16 @@ def test_daily_pipeline_two_days(spark, tmp_path):
         ("CL1", "Petrov", "Ivan", None, dob, "P1", valid, "+7999",
          d0, datetime(2025, 1, 2, 1, 0)),
     ])
-    pipeline.run_daily(
-        spark, str(data), wh_dir,
-        db_tables={"clients": clients_v2, "accounts": accounts, "cards": cards},
-        now=F.expr("TIMESTAMP_NTZ '2025-01-02 03:30:00'"),
-        today=F.expr("TIMESTAMP_NTZ '2025-01-02 00:00:00'"),
-    )
+    with jobs_started(spark) as jobs:
+        pipeline.run_daily(
+            spark, str(data), wh_dir,
+            db_tables={"clients": clients_v2, "accounts": accounts, "cards": cards},
+            now=F.expr("TIMESTAMP_NTZ '2025-01-02 03:30:00'"),
+            today=F.expr("TIMESTAMP_NTZ '2025-01-02 00:00:00'"),
+        )
+    # this day runs 85 Spark jobs; bookkeeping (a count per write,
+    # schema inference per read, a job per run-log row) once took 162
+    assert len(jobs) <= 90
     rep = wh.read("rep", "rep_fraud").collect()
     assert [(r["event_type"], str(r["event_dt"])) for r in rep] == [(3, "2025-01-02 11:30:00")]
 
