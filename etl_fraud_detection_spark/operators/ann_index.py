@@ -1,49 +1,77 @@
-"""Persisted IVF vector index: ANN admission and search whose daily
-cost scales with the BATCH (and the probed cells), never the corpus.
+"""Persisted ANN indexes: vector admission and search whose daily cost
+scales with the BATCH (and the probed cells), never the corpus.
 
-This is the vector twin of the text band index
-(operators/dedup_index.py) and follows the same build / ingest /
-read-only-probe split over the versioned warehouse:
+Four index families share ONE lifecycle over the versioned warehouse
+— the vector twin of the text band index (operators/dedup_index.py).
+A frozen :class:`IndexSpec` names the tables a family owns and
+switches the optional stages of Jégou et al. 2011 §IV, which always
+run in this order: rotate (OPQ, Ge et al. 2013) → coarse-assign (IVF)
+→ PQ-encode (raw vector or residual x − c(x)).
 
-- ``ivf_centroids``: (cid, cen_vec array<double>, cen_norm) — the
-  coarse quantizer. Either the deterministic lowest-id vectors (the
-  oracle-expressible variant, exactly ``similarity.ivf_topk``'s
-  default) or trained MLlib KMeans centers
-  (``similarity.kmeans_centroids``). Small — always broadcast.
-- ``ivf_assign``: (vid, vec, vnorm, cid) — one row per indexed vector
-  with its nearest-centroid cell, written PARTITIONED BY cid (build
-  and every append): a probe restricts the scan to the union of its
-  probed cells' files with a STATIC partition filter collected from
-  the bounded centroid rank (see ``_static_cell_filter`` — round 13
-  replaced reliance on dynamic partition pruning after measuring its
-  runtime fallback reading every partition) — the IVF access pattern
-  expressed as disk layout.
+======  ==========  ======  ============  ===============================
+family  rotate      coarse  encode        tables owned (layer ``index``)
+======  ==========  ======  ============  ===============================
+IVF     no          yes     none          ivf_centroids, ivf_assign
+PQ      no          no      raw           pq_codebook, pq_codes
+IVFADC  build opt.  yes     raw/residual  ivfpq_centroids, ivfpq_codebook,
+                                          ivfpq_codes, ivfpq_meta,
+                                          ivfpq_rotation
+OPQ     yes         no      raw           opq_rotation, opq_codebook,
+                                          opq_codes, opq_meta
+======  ==========  ======  ============  ===============================
 
-Both tables commit atomically (``Warehouse.begin_run``/``commit_run``)
-— the index can never hold assignments without the quantizer that
-produced them, and a crash mid-ingest rolls the append back.
+No table is shared between families, so building one index never
+changes another's answers.
 
-Why persistence is the point: ``ivf_topk`` (the pure-DataFrame
-operator) re-assigns the whole corpus to cells on every call, and
-``q_ann_ivf_kmeans`` even retrains the quantizer per session. Fine for
-a one-shot query; fatal for a daily-batch user at 100 TB, where
-re-assigning N vectors to amortize a Q-query session inverts the cost
-model. With the stored index:
+- centroids (cid, cen_vec array<double>, cen_norm): the coarse
+  quantizer — the deterministic lowest-id vectors (exactly the session
+  operators' default) or a trained frame (``similarity.kmeans_centroids``).
+  Small, always broadcast.
+- codebook (sub, cid, cs array<double>): per-subspace PQ centroids —
+  the lowest-id subvectors, the residuals of the lowest non-centroid
+  ids (residual encoding), or Lloyd-trained over the rotated corpus
+  (OPQ's default).
+- rotation (j, r array<double>): the d×d orthogonal OPQ rotation; a
+  rotated index trains its quantizers in rotated space and rotates
+  every later batch and query set with the STORED rotation.
+- rows: IVF stores (vid, vec, vnorm, cid); the PQ families store m
+  small-int codes per vector (vid, sub, code) — plus ``qver`` where a
+  meta table exists and ``cid`` where the coarse stage runs. Coarse
+  tables are PARTITIONED BY cid, and a probe restricts its scan to
+  the probed cells with a STATIC ``cid IN (...)`` filter
+  (:func:`_static_cell_filter`) — the IVF access pattern as disk
+  layout.
+- meta (one row): ``qver``, the quantizer VERSION — bumped by every
+  (re)build, stamped on every code row, filtered by every probe, so a
+  code encoded under one quantizer is never ADC-scored against
+  another's LUT. IVFADC's meta also records ``residual`` and
+  ``rotated``, its two build options, so ingest and probe follow the
+  stored mode and callers never pass a flag that could mismatch it.
 
-- ``build``  — once per quantizer version: one broadcast O(N·K)
-  assignment pass, the only corpus-sized job in the lifecycle.
-- ``ingest`` — per batch: assigns ONLY the batch against the STORED
-  centroids (O(batch·K)), appends; existing assignments are never
-  recomputed (pinned by test_ann_index.py).
-- ``probe``  — per query set: ranks queries against the broadcast
-  centroids, searches the nprobe nearest cells via a cid-key join —
-  no KMeans job, no corpus re-assignment, results identical to
-  ``ivf_topk`` given the same centroids.
+Lifecycle (:func:`_build`, :func:`_ingest`, :func:`_rebuild`,
+:func:`_probe`; the 15 public functions are one call each):
 
-The quantizer is deliberately FROZEN between builds: ingest never
-moves a centroid (standard IVF practice — drifted cells are fixed by
-a periodic rebuild, not by mutating the index under readers), so
-admission is append-only and replays are idempotent.
+- build — once per quantizer version: the only corpus-sized job.
+- ingest — per batch: encodes ONLY the batch against the stored,
+  FROZEN artifacts and appends (O(batch)); existing rows are never
+  recomputed. Idempotent on replay: vids already indexed are skipped
+  and duplicate vids within the batch collapse. ``commit=False``
+  computes the rows read-only (admission preview).
+- rebuild — drift correction by replacement: retrains the quantizers
+  (and a rotated index's rotation), re-encodes every vector under the
+  bumped version. IVF rows hold their vectors, so IVF rebuilds from
+  its own table; code tables cannot reconstruct vectors (that IS the
+  compression), so the PQ families take the corpus frame.
+- probe — read-only: the bounded query set is ranked against the
+  broadcast stored artifacts; no training, no corpus re-encode.
+  Results are bit-identical to the session operators in
+  operators/similarity.py given the same quantizers.
+
+Every write commits all of a family's tables under one
+``Warehouse.begin_run``/``commit_run``, so readers see either the old
+artifacts and rows or the new ones, and a crash rolls back to the last
+commit. Committing calls run ``Warehouse.recover()`` first: a crashed
+run's journal left on disk would otherwise make ``begin_run`` refuse.
 
 Reference parity: ANN extension (SURVEY.md §2 LLM-ops table); the
 reference engine (a psycopg2 batch job, etl.py) has no vector
@@ -52,36 +80,140 @@ surface — this is new capability, designed Spark-first.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from dataclasses import dataclass, replace
 
-from .similarity import argmax_cell, dot, norm, topk_per_query
+from pyspark.sql import DataFrame, functions as F
+
+from .similarity import (
+    argmax_cell, ivf_rank, ivfadc_codes, kmeans_centroids,
+    lowest_id_centroids, opq_rotation, pq_adc_rank, pq_adc_rank_cells,
+    pq_codebooks_kmeans, pq_default_codebook, pq_encode, pq_lut,
+    pq_subrows, probe_cells, residual_default_book, rotate_vecs, vec_rows,
+)
 
 LAYER = "index"
-T_CENTROIDS = "ivf_centroids"
-T_ASSIGN = "ivf_assign"
 
 
-def _require(df: DataFrame | None, table: str) -> DataFrame:
+@dataclass(frozen=True)
+class IndexSpec:
+    """One index family: its public-function prefix, the tables it
+    owns (None = the family has no such artifact) and its stage
+    switches. ``modal`` families choose ``rotate``/``encode`` per
+    build and record the choice in their meta row."""
+
+    prefix: str
+    t_rows: str
+    t_centroids: str | None = None
+    t_codebook: str | None = None
+    t_rotation: str | None = None
+    t_meta: str | None = None
+    rotate: bool = False
+    coarse: bool = False
+    encode: str = "none"  # "none" | "raw" | "residual"
+    trained_book: bool = False  # default codebook: Lloyd, not lowest-id
+    modal: bool = False
+
+
+IVF = IndexSpec("", "ivf_assign", t_centroids="ivf_centroids", coarse=True)
+PQ = IndexSpec("pq_", "pq_codes", t_codebook="pq_codebook", encode="raw")
+IVFADC = IndexSpec(
+    "ivfpq_", "ivfpq_codes", t_centroids="ivfpq_centroids",
+    t_codebook="ivfpq_codebook", t_rotation="ivfpq_rotation",
+    t_meta="ivfpq_meta", coarse=True, encode="raw", modal=True,
+)
+OPQ = IndexSpec(
+    "opq_", "opq_codes", t_codebook="opq_codebook",
+    t_rotation="opq_rotation", t_meta="opq_meta", rotate=True,
+    encode="raw", trained_book=True,
+)
+
+
+def _read(wh, spec: IndexSpec, table: str | None) -> DataFrame | None:
+    """A table the family owns; None for an artifact it has none of."""
+    if table is None:
+        return None
+    df = wh.read(LAYER, table)
     if df is None:
         raise ValueError(
-            f"IVF index not built: table {LAYER}.{table} is missing in this "
-            f"warehouse — call ann_index.build() before ingest/probe"
+            f"ANN index not built: table {LAYER}.{table} is missing in "
+            f"this warehouse — call ann_index.{spec.prefix}build() before "
+            f"ingest/probe"
         )
     return df
 
 
-def _assign(vectors: DataFrame, cen: DataFrame) -> DataFrame:
-    """Nearest-centroid cell per vector (cosine argmax, ties by lowest
-    cid — bit-identical to similarity.ivf_topk's assignment): broadcast
-    O(rows · K) scoring collapsed map-side by similarity.argmax_cell's
-    min-struct aggregate (the round-12 shape — one exchange of reduced
-    structs, never K scored rows per vector)."""
-    return argmax_cell(vectors, cen).select("vid", "vec", "vnorm", "cid")
+def _meta(wh, spec: IndexSpec) -> dict:
+    """The stored meta row — ONE 1-row read (bounded-collect class).
+    Indexes built before the meta table existed are version 0,
+    unrotated raw codes (the only mode that existed then); an
+    existing-but-EMPTY meta table is corrupt warehouse state and
+    raises a descriptive error."""
+    out = {"qver": 0}
+    if spec.modal:
+        out = {"residual": False, "qver": 0, "rotated": False}
+    meta = wh.read(LAYER, spec.t_meta) if spec.t_meta else None
+    if meta is None:
+        return out
+    row = meta.first()
+    if row is None:
+        raise ValueError(
+            f"ANN index metadata corrupt: {LAYER}.{spec.t_meta} exists but "
+            f"holds no row — the atomic commit should make this "
+            f"impossible; rebuild the index (ann_index.{spec.prefix}build)"
+        )
+    got = row.asDict()
+    return {key: type(v)(got.get(key) or v) for key, v in out.items()}
 
 
-def _static_cell_filter(
-    codes: DataFrame, q_cells: DataFrame, cell_col: str = "cid"
-) -> DataFrame:
+def _stored(wh, spec: IndexSpec) -> tuple[IndexSpec, dict]:
+    """The family spec with the stage switches its meta row records,
+    and the meta row."""
+    meta = _meta(wh, spec)
+    if spec.modal:
+        spec = replace(
+            spec, rotate=meta["rotated"],
+            encode="residual" if meta["residual"] else "raw",
+        )
+    return spec, meta
+
+
+def _rotation(wh, spec: IndexSpec) -> list[list[float]]:
+    """The stored rotation, ordered by output coordinate — a d-row
+    bounded metadata collect (d = embedding dim)."""
+    rot = _read(wh, spec, spec.t_rotation)
+    return [list(r["r"]) for r in rot.orderBy("j").collect()]
+
+
+def _rot_df(spark, rotation: list[list[float]]) -> DataFrame:
+    """A d×d rotation as its warehouse frame (j = output coordinate)."""
+    return spark.createDataFrame(
+        [(j, [float(x) for x in row]) for j, row in enumerate(rotation)],
+        "j int, r array<double>",
+    )
+
+
+def _pq_m(book: DataFrame) -> int:
+    """Subspace count from a codebook — a 1-row metadata aggregate
+    (the bounded-collect class)."""
+    return book.agg(F.max("sub")).first()[0] + 1
+
+
+def _check_book_m(codebooks: DataFrame, m: int) -> None:
+    """Supplied trained codebooks must cover exactly the ``m``
+    subspaces the vectors are sliced into — a mismatch would store
+    codes sliced inconsistently with what every later probe derives
+    from the stored book (silent wrong distances, the worst failure).
+    1-row aggregate, build-time only."""
+    got = _pq_m(codebooks)
+    if got != m:
+        raise ValueError(
+            f"codebooks cover {got} subspaces but m={m}: vectors would "
+            f"be sliced into {m} subvectors while probes derive m={got} "
+            f"from the stored book — pass matching m/codebooks"
+        )
+
+
+def _static_cell_filter(codes: DataFrame, q_cells: DataFrame) -> DataFrame:
     """Restrict a cid-partitioned table to the UNION of probed cells
     with a STATIC partition filter: the probed-cell set is a bounded
     Q·nprobe-row metadata collect (the bounded-collect class — the
@@ -101,20 +233,291 @@ def _static_cell_filter(
     same cell set. NOTE this makes every probe EAGER: a Spark job runs
     at probe-construction time even if the returned DataFrame is never
     evaluated (bounded — the rank is a Q×K frame)."""
-    cells = sorted(
-        r[0] for r in q_cells.select(cell_col).distinct().collect()
-    )
+    cells = sorted(r[0] for r in q_cells.select("cid").distinct().collect())
     if not cells:
         return codes.where(F.lit(False))
-    return codes.where(F.col(cell_col).isin(cells))
+    return codes.where(F.col("cid").isin(cells))
 
 
-def _vrows(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("vnorm"),
+def _store(wh, table: str, df: DataFrame, *cols) -> DataFrame:
+    """Overwrite an artifact table and read it back: everything
+    downstream derives from the STORED artifact, never the in-memory
+    frame."""
+    wh.overwrite(LAYER, table, df.select(*cols))
+    return wh.read(LAYER, table)
+
+
+def _default_book(spec, emb, cen, m, ksub, n_centroids, id_col, vec_col):
+    """Lloyd-trained (OPQ), the residuals of the lowest non-centroid
+    ids (residual encoding) or the lowest-id subvectors."""
+    if spec.trained_book:
+        return pq_codebooks_kmeans(emb, m=m, ksub=ksub, vec_col=vec_col)
+    if spec.encode == "residual":
+        return residual_default_book(
+            emb, cen, m, n_centroids, ksub, id_col, vec_col
+        )
+    return pq_default_codebook(emb, m, ksub, id_col, vec_col)
+
+
+def _encode(spec, vecs, cen, book, m, qver, id_col, vec_col) -> DataFrame:
+    """The rows ``spec`` stores for ``vecs`` (already rotated):
+    IVF (vid, vec, vnorm, cid), PQ (vid, sub, code), IVFADC
+    (vid, sub, code, qver, cid), OPQ (vid, sub, code, qver)."""
+    if spec.encode == "none":
+        return argmax_cell(vec_rows(vecs, id_col, vec_col), cen)
+    if spec.coarse:
+        rows = ivfadc_codes(
+            vecs, cen, book, m, spec.encode == "residual", id_col, vec_col
+        )
+    else:
+        rows = pq_encode(pq_subrows(vecs, m, id_col, vec_col), book)
+    if spec.t_meta is None:
+        return rows
+    return rows.select(
+        "vid", "sub", "code", F.lit(qver).cast("long").alias("qver"),
+        *(["cid"] if spec.coarse else []),
     )
+
+
+def _build(
+    spec: IndexSpec,
+    wh,
+    emb: DataFrame,
+    run_id: int,
+    m: int = 4,
+    ksub: int = 16,
+    n_centroids: int = 16,
+    centroids: DataFrame | None = None,
+    codebooks: DataFrame | None = None,
+    rotation: list[list[float]] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Initial (or re-)build: every artifact plus the full-corpus rows,
+    overwritten under ONE atomic commit. Each stage reads back the
+    artifact the previous one stored."""
+    wh.recover()
+    if spec.rotate and rotation is None:
+        rotation = opq_rotation(emb, m, vec_col)
+    if codebooks is not None:
+        _check_book_m(codebooks, m)
+    qver = 0
+    if spec.t_meta is not None:
+        # read the old version BEFORE the run opens
+        try:
+            qver = _meta(wh, spec)["qver"] + 1
+        except ValueError:  # corrupt empty meta — this build replaces it
+            qver = 1
+    wh.begin_run(run_id)
+    cached = None
+    # try/finally so the corpus-sized rotated cache is released on ALL
+    # exits, a failed overwrite included
+    try:
+        if spec.rotate:
+            wh.overwrite(LAYER, spec.t_rotation, _rot_df(wh.spark, rotation))
+            # persisted: the quantizer derivations, the assignment and
+            # the encode pass all consume it — without the cache the
+            # rotation re-evaluates once per subtree (measured r14: the
+            # un-cached d=64 build ran >25 min at 2M vectors)
+            emb = cached = rotate_vecs(
+                emb, _rotation(wh, spec), vec_col=vec_col
+            ).persist()
+        cen = book = None
+        if spec.coarse:
+            if centroids is None:
+                centroids = lowest_id_centroids(emb, n_centroids, id_col, vec_col)
+            cen = _store(
+                wh, spec.t_centroids, centroids, F.col("cid").cast("int"),
+                F.col("cen_vec").cast("array<double>"), "cen_norm",
+            )
+        if spec.encode != "none":
+            if codebooks is None:
+                codebooks = _default_book(
+                    spec, emb, cen, m, ksub, n_centroids, id_col, vec_col
+                )
+            book = _store(
+                wh, spec.t_codebook, codebooks, F.col("sub").cast("int"),
+                F.col("cid").cast("int"), F.col("cs").cast("array<double>"),
+            )
+        wh.overwrite(
+            LAYER, spec.t_rows,
+            _encode(spec, emb, cen, book, m, qver, id_col, vec_col),
+            partition_by=["cid"] if spec.coarse else None,
+        )
+        if spec.t_meta is not None:
+            meta = (
+                [(spec.encode == "residual", qver, spec.rotate)],
+                "residual boolean, qver long, rotated boolean",
+            ) if spec.modal else ([(qver,)], "qver long")
+            wh.overwrite(LAYER, spec.t_meta, wh.spark.createDataFrame(*meta))
+        wh.commit_run(run_id)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+
+
+def _ingest(
+    spec: IndexSpec,
+    wh,
+    batch: DataFrame,
+    run_id: int | None,
+    id_col: str,
+    vec_col: str,
+    commit: bool,
+) -> DataFrame:
+    """Admit a vector batch: encode ONLY the genuinely new vectors
+    against the stored, frozen artifacts in the stored mode and append
+    them. Returns the new rows — IVF: (vid, cid)."""
+    if commit:
+        if run_id is None:
+            raise ValueError("run_id is required when commit=True")
+        wh.recover()
+    spec, meta = _stored(wh, spec)
+    cen, book = _read(wh, spec, spec.t_centroids), _read(wh, spec, spec.t_codebook)
+    rows = _read(wh, spec, spec.t_rows)
+    # replay guard: vids already indexed (a foreachBatch redelivery
+    # after a crash between index commit and stream checkpoint) are
+    # skipped, and duplicate vids WITHIN the batch collapse to one row
+    batch = batch.dropDuplicates([id_col])
+    already = rows.select("vid").join(
+        F.broadcast(batch.select(F.col(id_col).alias("vid"))),
+        ["vid"], "left_semi",
+    )
+    new = batch.join(
+        F.broadcast(already), batch[id_col] == already["vid"], "left_anti"
+    )
+    if spec.rotate:
+        new = rotate_vecs(new, _rotation(wh, spec), vec_col=vec_col)
+    m = _pq_m(book) if book is not None else 0
+    out = _encode(spec, new, cen, book, m, meta["qver"], id_col, vec_col)
+    if spec.t_meta is not None and "qver" not in rows.columns:
+        # pre-qver index (single legacy build = implicit version 0):
+        # Warehouse.read does not mergeSchema, so stamping new rows
+        # would make the union's schema file-order dependent — and if
+        # qver DID surface, every legacy row would read NULL and the
+        # probe's equality filter would silently exclude the original
+        # corpus from results. Keep the legacy schema uniform; probes
+        # skip the version filter when the column is absent.
+        out = out.drop("qver")
+    if commit:
+        out = out.localCheckpoint()  # one eager pass feeds append + return
+        wh.begin_run(run_id)
+        wh.append(
+            LAYER, spec.t_rows, out,
+            partition_by=["cid"] if spec.coarse else None,
+        )
+        wh.commit_run(run_id)
+    return out.select("vid", "cid") if spec.encode == "none" else out
+
+
+def _rebuild(
+    spec: IndexSpec,
+    wh,
+    emb: DataFrame | None,
+    run_id: int,
+    m: int = 4,
+    ksub: int = 16,
+    n_centroids: int = 16,
+    centroids: DataFrame | None = None,
+    codebooks: DataFrame | None = None,
+    rotation: list[list[float]] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Rebuild-by-replacement in the STORED mode: retrain what the
+    caller did not supply (the rotation of a rotated index over the
+    current corpus, then the coarse quantizer with MLlib KMeans in the
+    new rotated space) and delegate to :func:`_build`, which
+    re-encodes every row under the bumped version."""
+    wh.recover()
+    spec, _ = _stored(wh, spec)
+    rows = _read(wh, spec, spec.t_rows)  # rebuild, not build
+    if spec.encode == "none":
+        # the corpus comes FROM the stored index, materialized once:
+        # KMeans iterates over it and the re-assign pass reads it
+        # again after its source table is replaced
+        emb = rows.select(
+            F.col("vid").alias(id_col), F.col("vec").alias(vec_col)
+        ).localCheckpoint()
+    if spec.rotate and rotation is None:
+        if centroids is not None:
+            # the caller's centroids live in SOME rotated space, but
+            # the rotation about to be retrained doesn't exist yet —
+            # pairing them degrades recall silently (the index stays
+            # self-consistent, so bit-equality pins can't catch it)
+            raise ValueError(
+                "rebuilding a ROTATED index with explicit centroids "
+                "requires the matching rotation: pass rotation= "
+                "alongside centroids=, or pass neither to retrain both"
+            )
+        rotation = opq_rotation(emb, m, vec_col)
+    if spec.coarse and centroids is None:
+        train = (
+            rotate_vecs(emb, rotation, vec_col=vec_col)
+            if rotation is not None else emb
+        )
+        centroids = kmeans_centroids(
+            train.select(F.col(vec_col).alias("embedding")),
+            n_centroids=n_centroids,
+        )
+    _build(
+        replace(spec, rotate=rotation is not None), wh, emb, run_id, m,
+        ksub, n_centroids, centroids, codebooks, rotation, id_col, vec_col,
+    )
+
+
+def _probe(
+    spec: IndexSpec,
+    wh,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Search the stored index, READ-ONLY, in its stored mode. Coarse
+    families rank the query set against the broadcast centroids and
+    score only the ``nprobe`` probed cells' rows; EAGER, since the
+    probed-cell set is collected at call time for the static partition
+    filter. Output (query_id, cand_id, rnk, cos|adc)."""
+    spec, meta = _stored(wh, spec)
+    cen, book = _read(wh, spec, spec.t_centroids), _read(wh, spec, spec.t_codebook)
+    rows = _read(wh, spec, spec.t_rows)
+    if spec.rotate:
+        # d ≤ 16 folds as codegen over the Q query rows, d > 16 is one
+        # Arrow node over the bounded query frame — zero per-candidate
+        # cost either way; orthogonality preserves inner products
+        queries = rotate_vecs(queries, _rotation(wh, spec), vec_col=vec_col)
+    if spec.t_meta is not None and "qver" in rows.columns:
+        # score ONLY rows encoded under the CURRENT quantizer version,
+        # filtered at the parquet scan (pushed predicate + row-group
+        # stats); pre-qver indexes have no column, single build
+        rows = rows.where(F.col("qver") == F.lit(meta["qver"]))
+    m = _pq_m(book) if book is not None else 0
+    lut = None if book is None else pq_lut(
+        pq_subrows(queries, m, id_col, vec_col), book
+    )
+    if not spec.coarse:
+        return pq_adc_rank(rows, lut, m, k)
+    keep = {"none": ["q_vec", "q_norm"], "residual": ["qc"]}.get(spec.encode, [])
+    # one eager pass: the static filter's collect and the cid join
+    # provably share the same probed-cell set
+    q_cells = (
+        probe_cells(queries, cen, nprobe, id_col, vec_col)
+        .select("query_id", "cid", *keep)
+        .localCheckpoint()
+    )
+    rows = _static_cell_filter(rows, q_cells)
+    if spec.encode == "none":
+        return ivf_rank(rows, q_cells, k)
+    return pq_adc_rank_cells(
+        rows, q_cells, lut, m, k, residual=spec.encode == "residual"
+    )
+
+
+# ---------------------------------------------------------------------------
+# The 15 public functions: one call each with the family's spec.
+# ---------------------------------------------------------------------------
 
 
 def build(
@@ -126,35 +529,13 @@ def build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Initial (or re-)build: quantizer + full-corpus assignment,
-    overwritten atomically. ``centroids`` accepts a trained frame
-    (cid, cen_vec, cen_norm) — e.g. ``similarity.kmeans_centroids`` —
-    otherwise the ``n_centroids`` lowest-id vectors act as the
-    deterministic, oracle-expressible quantizer."""
-    if centroids is None:
-        centroids = emb.where(F.col(id_col) < n_centroids).select(
-            F.col(id_col).cast("int").alias("cid"),
-            F.col(vec_col).cast("array<double>").alias("cen_vec"),
-            norm(F.col(vec_col)).alias("cen_norm"),
-        )
-    else:
-        centroids = centroids.select(
-            F.col("cid").cast("int"),
-            F.col("cen_vec").cast("array<double>"),
-            "cen_norm",
-        )
-    wh.begin_run(run_id)
-    wh.overwrite(LAYER, T_CENTROIDS, centroids)
-    cen = wh.read(LAYER, T_CENTROIDS)  # assignments derive from the STORED quantizer
-    # partitioned by cell id: a probe reads only its nprobe cells'
-    # files (static partition filter from the bounded centroid rank;
-    # see _static_cell_filter), the IVF access pattern on disk
-    wh.overwrite(
-        LAYER, T_ASSIGN,
-        _assign(_vrows(emb, id_col, vec_col), cen),
-        partition_by=["cid"],
-    )
-    wh.commit_run(run_id)
+    """IVF build: quantizer + full-corpus cell assignment. ``centroids``
+    accepts a trained (cid, cen_vec, cen_norm) frame — e.g.
+    ``similarity.kmeans_centroids`` — otherwise the ``n_centroids``
+    lowest-id vectors act as the deterministic, oracle-expressible
+    quantizer (``similarity.ivf_topk``'s default)."""
+    _build(IVF, wh, emb, run_id, n_centroids=n_centroids,
+           centroids=centroids, id_col=id_col, vec_col=vec_col)
 
 
 def ingest(
@@ -165,37 +546,10 @@ def ingest(
     vec_col: str = "embedding",
     commit: bool = True,
 ) -> DataFrame:
-    """Admit a vector batch: assign ONLY the batch against the stored
-    (frozen) centroids and append — existing assignments are never
-    recomputed, so daily cost is O(batch · K) + the replay-guard index
-    scan, independent of corpus size.
-
-    IDEMPOTENT on replay: vids already present in ``ivf_assign``
-    (foreachBatch redelivery after a crash between index commit and
-    stream checkpoint) are skipped, not re-appended, and duplicate vids
-    WITHIN the batch collapse to one row (same contract as
-    dedup_index.ingest — without it a doubled vector would score itself
-    in every later probe). Returns the (vid, cid) assignment frame for
-    the genuinely new vectors; ``commit=False`` computes it read-only
-    (admission preview)."""
-    cen = _require(wh.read(LAYER, T_CENTROIDS), T_CENTROIDS)
-    idx = _require(wh.read(LAYER, T_ASSIGN), T_ASSIGN)
-    batch = batch.dropDuplicates([id_col])
-    batch_ids = batch.select(F.col(id_col).alias("vid"))
-    already = idx.select("vid").join(F.broadcast(batch_ids), ["vid"], "left_semi")
-    new_rows = _vrows(batch, id_col, vec_col).join(
-        F.broadcast(already), ["vid"], "left_anti"
-    )
-    assigned = _assign(new_rows, cen)
-    if not commit:
-        return assigned.select("vid", "cid")
-    if run_id is None:
-        raise ValueError("run_id is required when commit=True")
-    assigned = assigned.localCheckpoint()  # one eager pass feeds append + return
-    wh.begin_run(run_id)
-    wh.append(LAYER, T_ASSIGN, assigned, partition_by=["cid"])
-    wh.commit_run(run_id)
-    return assigned.select("vid", "cid")
+    """IVF admission: assign ONLY the batch against the stored (frozen)
+    centroids and append — O(batch · K) plus the replay-guard scan.
+    Returns the (vid, cid) assignments of the genuinely new vectors."""
+    return _ingest(IVF, wh, batch, run_id, id_col, vec_col, commit)
 
 
 def rebuild(
@@ -204,46 +558,13 @@ def rebuild(
     n_centroids: int = 16,
     centroids: DataFrame | None = None,
 ) -> None:
-    """Periodic quantizer REBUILD-BY-REPLACEMENT — the lifecycle step
-    the frozen-quantizer contract defers drift correction to (pinned
-    by test_ann_index.py). After N drifting ingests the stored cells no
-    longer reflect the corpus and probe recall degrades; rebuild:
-
-    - derives the corpus FROM the stored index (vid/vec/vnorm rows of
-      ``ivf_assign`` — no external re-read of source tables),
-    - trains a fresh quantizer over it (MLlib KMeans via
-      ``similarity.kmeans_centroids``, or an explicit ``centroids``
-      frame),
-    - re-assigns every vector and swaps BOTH tables under one atomic
-      commit (``begin_run``/``commit_run``).
-
-    Readers therefore observe either (old quantizer, old assignments)
-    or (new, new) — a mixed-quantizer read is structurally impossible,
-    and a crash mid-rebuild rolls back to the old consistent pair via
-    ``Warehouse.recover()``. Cost: one corpus-sized O(N·K) assignment
-    pass, the same class as ``build`` — amortized over all the batches
-    admitted since the previous rebuild."""
-    idx = _require(wh.read(LAYER, T_ASSIGN), T_ASSIGN)
-    # materialize the corpus once: KMeans iterates over it and the
-    # re-assign pass reads it again after its source table is replaced
-    corpus = idx.select("vid", "vec", "vnorm").localCheckpoint()
-    if centroids is None:
-        from .similarity import kmeans_centroids
-
-        centroids = kmeans_centroids(
-            corpus.select(F.col("vec").alias("embedding")),
-            n_centroids=n_centroids,
-        )
-    centroids = centroids.select(
-        F.col("cid").cast("int"),
-        F.col("cen_vec").cast("array<double>"),
-        "cen_norm",
-    )
-    wh.begin_run(run_id)
-    wh.overwrite(LAYER, T_CENTROIDS, centroids)
-    cen = wh.read(LAYER, T_CENTROIDS)  # re-assign from the STORED v2 quantizer
-    wh.overwrite(LAYER, T_ASSIGN, _assign(corpus, cen), partition_by=["cid"])
-    wh.commit_run(run_id)
+    """IVF quantizer rebuild: the corpus is read from ``ivf_assign``
+    itself, a fresh quantizer is trained over it (MLlib KMeans unless
+    ``centroids`` is supplied) and every vector is re-assigned — both
+    tables swap under one commit, so a crash mid-rebuild rolls back to
+    the old consistent pair via ``Warehouse.recover()``."""
+    _rebuild(IVF, wh, None, run_id, n_centroids=n_centroids,
+             centroids=centroids)
 
 
 def probe(
@@ -254,68 +575,10 @@ def probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Search the stored index for each query vector's cosine top-k
-    among the vectors of its ``nprobe`` nearest cells. READ-ONLY: no
-    KMeans job, no corpus re-assignment — the plan is (broadcast
-    centroid rank over the bounded query set) ⋈ (ivf_assign scan on
-    cid). Candidates live in exactly one cell, so no (query, cand)
-    pair scores twice and no dedup pass is needed. Output
-    (query_id, cand_id, rnk, cos) — identical to similarity.ivf_topk
-    given the same centroids (pinned by test_ann_index.py).
-
-    EAGER: the probed-cell set is collected at call time to build the
-    static partition filter (see _static_cell_filter), so a bounded
-    Spark job runs even if the returned frame is never evaluated."""
-    cen = _require(wh.read(LAYER, T_CENTROIDS), T_CENTROIDS)
-    idx = _require(wh.read(LAYER, T_ASSIGN), T_ASSIGN)
-    w_cells = Window.partitionBy("query_id").orderBy(F.col("qa_cos").desc(), F.col("cid"))
-    q_cells = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        )
-        .crossJoin(F.broadcast(cen))
-        .select(
-            "query_id", "q_vec", "q_norm", "cid",
-            (dot(F.col("q_vec"), F.col("cen_vec")) / (F.col("q_norm") * F.col("cen_norm"))).alias("qa_cos"),
-        )
-        .withColumn("_qrn", F.row_number().over(w_cells))
-        .where(F.col("_qrn") <= nprobe)
-        .select("query_id", "q_vec", "q_norm", "cid")
-    )
-    # one eager pass: the static filter's collect and the cid join
-    # provably share the same probed-cell set (and the Q×K centroid
-    # rank computes once, not twice)
-    q_cells = q_cells.localCheckpoint()
-    scored = (
-        _static_cell_filter(idx, q_cells)
-        .join(F.broadcast(q_cells), ["cid"])
-        .where(F.col("vid") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vid").alias("cand_id"),
-            (dot(F.col("q_vec"), F.col("vec")) / (F.col("q_norm") * F.col("vnorm"))).alias("cos"),
-        )
-    )
-    # two-level top-k: a mega-cell (content-skewed corpora cluster) must
-    # never land one query's whole candidate set on a single reducer
-    return topk_per_query(
-        scored, k, [F.col("cos").desc(), F.col("cand_id")]
-    ).select("query_id", "cand_id", "rnk", "cos")
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ index: the ADC twin of the IVF tables above. Same
-# build / ingest / read-only-probe lifecycle and the same atomic
-# multi-table commit; the stored artifacts are the per-subspace
-# codebook (tiny, always broadcast) and the code table — m small ints
-# per vector, the representation that actually fits in memory when the
-# fp32 corpus doesn't (Jégou et al. 2011).
-# ---------------------------------------------------------------------------
-
-T_PQ_CODEBOOK = "pq_codebook"
-T_PQ_CODES = "pq_codes"
+    """IVF search: each query's cosine top-k among the vectors of its
+    ``nprobe`` nearest cells — (query_id, cand_id, rnk, cos), identical
+    to ``similarity.ivf_topk`` given the same centroids."""
+    return _probe(IVF, wh, queries, k, nprobe, id_col, vec_col)
 
 
 def pq_build(
@@ -328,52 +591,12 @@ def pq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Initial (or re-)build: codebook + full-corpus codes, overwritten
-    atomically. ``codebooks`` accepts a trained (sub, cid, cs) frame —
-    e.g. ``similarity.pq_codebooks_kmeans`` — otherwise the subvectors
-    of the ``ksub`` lowest-id vectors act as the deterministic,
-    oracle-expressible codebook. The one corpus-sized job in the
-    lifecycle (O(N·m·ksub) flops); the stored codes never carry
-    floats."""
-    from .similarity import pq_default_codebook, pq_encode, pq_subrows
-
-    if codebooks is None:
-        codebooks = pq_default_codebook(emb, m, ksub, id_col, vec_col)
-    else:
-        _check_book_m(codebooks, m)
-    codebooks = codebooks.select(
-        F.col("sub").cast("int"),
-        F.col("cid").cast("int"),
-        F.col("cs").cast("array<double>"),
-    )
-    wh.begin_run(run_id)
-    wh.overwrite(LAYER, T_PQ_CODEBOOK, codebooks)
-    cen = wh.read(LAYER, T_PQ_CODEBOOK)  # codes derive from the STORED book
-    wh.overwrite(
-        LAYER, T_PQ_CODES, pq_encode(pq_subrows(emb, m, id_col, vec_col), cen)
-    )
-    wh.commit_run(run_id)
-
-
-def _pq_m(cen: DataFrame) -> int:
-    """Subspace count from the stored codebook — a 1-row metadata
-    aggregate (the bounded-collect class)."""
-    return cen.agg(F.max("sub")).first()[0] + 1
-
-
-def _check_book_m(codebooks: DataFrame, m: int) -> None:
-    """Supplied trained codebooks must cover exactly the ``m``
-    subspaces the vectors are sliced into — a mismatch would store
-    codes sliced inconsistently with what every later probe derives
-    from the stored book (silent wrong distances, the worst failure).
-    1-row aggregate, build-time only."""
-    got = _pq_m(codebooks)
-    if got != m:
-        raise ValueError(
-            f"codebooks cover {got} subspaces but m={m}: vectors would "
-            f"be sliced into {m} subvectors while probes derive m={got} "
-            f"from the stored book — pass matching m/codebooks"
-        )
+    """Flat PQ build: codebook + full-corpus codes. ``codebooks``
+    accepts a trained (sub, cid, cs) frame — e.g.
+    ``similarity.pq_codebooks_kmeans`` — otherwise the subvectors of
+    the ``ksub`` lowest-id vectors act as the deterministic codebook."""
+    _build(PQ, wh, emb, run_id, m=m, ksub=ksub, codebooks=codebooks,
+           id_col=id_col, vec_col=vec_col)
 
 
 def pq_ingest(
@@ -384,94 +607,21 @@ def pq_ingest(
     vec_col: str = "embedding",
     commit: bool = True,
 ) -> DataFrame:
-    """Admit a vector batch: encode ONLY the batch against the stored
-    (frozen) codebook and append — existing codes are never recomputed,
-    so daily cost is O(batch·m·ksub) + the replay-guard scan.
-    IDEMPOTENT on replay (the ann/dedup ingest contract): vids already
-    coded are skipped, duplicate vids within the batch collapse.
-    Returns the (vid, sub, code) rows of the genuinely new vectors;
-    ``commit=False`` computes read-only."""
-    from .similarity import pq_encode, pq_subrows
-
-    cen = _require(wh.read(LAYER, T_PQ_CODEBOOK), T_PQ_CODEBOOK)
-    idx = _require(wh.read(LAYER, T_PQ_CODES), T_PQ_CODES)
-    batch = batch.dropDuplicates([id_col])
-    batch_ids = batch.select(F.col(id_col).alias("vid"))
-    already = idx.select("vid").join(
-        F.broadcast(batch_ids), ["vid"], "left_semi"
-    )
-    m = _pq_m(cen)
-    new_rows = pq_subrows(batch, m, id_col, vec_col).join(
-        F.broadcast(already), ["vid"], "left_anti"
-    )
-    coded = pq_encode(new_rows, cen)
-    if not commit:
-        return coded
-    if run_id is None:
-        raise ValueError("run_id is required when commit=True")
-    coded = coded.localCheckpoint()  # one eager pass feeds append + return
-    wh.begin_run(run_id)
-    wh.append(LAYER, T_PQ_CODES, coded)
-    wh.commit_run(run_id)
-    return coded
+    """Flat PQ admission: encode ONLY the batch against the stored
+    codebook and append. Returns the new (vid, sub, code) rows."""
+    return _ingest(PQ, wh, batch, run_id, id_col, vec_col, commit)
 
 
-# ---------------------------------------------------------------------------
-# Persisted IVFADC index: the IVF × PQ COMPOSITION (Jégou et al. 2011
-# §IV) — coarse quantizer + per-subspace codebook + a code table that
-# carries each vector's coarse cell and is PARTITIONED BY it. A probe
-# ranks its bounded query set against the broadcast centroids, then
-# ADC-scores ONLY the nprobe probed cells' code rows: a static
-# partition filter from the bounded centroid rank prunes the scan at
-# file-listing time (_static_cell_filter), so at 10⁹ vectors a
-# query touches N·nprobe/K code rows — never the corpus. Same atomic
-# multi-table commit and frozen-quantizer ingest contract as the IVF
-# and PQ indexes it composes. An optional stored OPQ rotation
-# (ivfpq_build(rotation=...), Ge et al. 2013 §4) trains both quantizers
-# in rotated space and rotates every later batch/query set — OPQ's
-# recall lever composed with the cell-pruned scan.
-# ---------------------------------------------------------------------------
-
-T_IVFPQ_CODES = "ivfpq_codes"
-T_IVFPQ_META = "ivfpq_meta"
-T_IVFPQ_ROT = "ivfpq_rotation"
-
-
-def _ivfpq_meta(wh) -> dict:
-    """Stored index metadata — ONE 1-row read per ingest/probe call
-    (bounded-collect class): ``residual`` (encoding mode), ``qver``
-    (the quantizer VERSION the stored codes were encoded under —
-    bumped by every build/rebuild, stamped on every code row, checked
-    by every probe, so a code encoded under quantizer A can never be
-    ADC-scored against quantizer B's LUT) and ``rotated`` (whether the
-    index lives in OPQ-rotated space — Ge et al. 2013 §4 composed with
-    the inverted file: quantizers trained and codes encoded over
-    R·x, probes rotate the query set with the STORED rotation).
-    Indexes built before the meta table existed are raw-code unrotated
-    version 0 (the only mode that existed then); an existing-but-EMPTY
-    meta table is corrupt warehouse state and raises a descriptive
-    error instead of the bare TypeError ``first()[...]`` would."""
-    meta = wh.read(LAYER, T_IVFPQ_META)
-    if meta is None:
-        return {"residual": False, "qver": 0, "rotated": False}
-    row = meta.first()
-    if row is None:
-        raise ValueError(
-            f"IVFADC index metadata corrupt: {LAYER}.{T_IVFPQ_META} exists "
-            f"but holds no row — the atomic commit should make this "
-            f"impossible; rebuild the index (ann_index.ivfpq_build)"
-        )
-    d = row.asDict()
-    return {
-        "residual": bool(d["residual"]),
-        "qver": int(d.get("qver") or 0),
-        "rotated": bool(d.get("rotated") or False),
-    }
-
-
-def _ivfpq_is_residual(wh) -> bool:
-    """Stored encoding mode (see :func:`_ivfpq_meta`)."""
-    return _ivfpq_meta(wh)["residual"]
+def pq_probe(
+    wh,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Flat ADC search over the stored integer codes — identical to
+    ``similarity.pq_adc_topk`` given the same codebook."""
+    return _probe(PQ, wh, queries, k, 0, id_col, vec_col)
 
 
 def ivfpq_build(
@@ -488,148 +638,26 @@ def ivfpq_build(
     residual: bool = False,
     rotation: list[list[float]] | None = None,
 ) -> None:
-    """Initial (or re-)build: coarse quantizer + PQ codebook + the
-    cell-carrying code table + a 1-row meta record of the encoding
-    mode, all under ONE atomic commit (an IVFADC index can never hold
-    codes without both quantizers that produced them, nor codes whose
-    encoding mode readers can't know). The one corpus-sized job in the
-    lifecycle: O(N·K) coarse assignment (map-side argmax_cell
-    aggregate) + O(N·m·ksub) encode; the stored codes are m small ints
-    + a cell id per vector — the floats are never stored on the big
-    side.
+    """IVFADC build: coarse quantizer + PQ codebook + the cid-partitioned
+    code table + the meta row, all under one commit.
 
     ``residual=True`` stores Jégou §IV residual codes (quantize
-    x − c(x); probes score ⟨q, c⟩ + Σ LUT partials): tighter
-    quantization under a TRAINED coarse quantizer (measured, SCALE.md
-    r12), at the price that codes are COUPLED to the coarse quantizer
-    — a quantizer swap demands a full re-build, which this function
-    is; there is deliberately no rebuild-in-place. The default
-    residual codebook is the residuals of the ksub lowest ids ≥
-    ``n_centroids`` (ids below it are the centroids themselves under
-    the lowest-id quantizer — their residuals are identically zero).
+    x − c(x); probes score ⟨q, c⟩ + Σ LUT partials): tighter under a
+    TRAINED coarse quantizer (SCALE.md r12), at the price that codes
+    are coupled to the coarse quantizer. The default residual codebook
+    is the residuals of the ksub lowest ids ≥ ``n_centroids``.
 
     ``rotation`` (a d×d orthogonal matrix, e.g.
-    ``similarity.opq_rotation``) builds the OPQ × IVFADC composition
-    of Ge et al. 2013 §4: the corpus is rotated ONCE here, the coarse
-    quantizer and PQ codebooks live in ROTATED space (explicit
-    ``centroids``/``codebooks`` must therefore be rotated-space
-    artifacts — the deterministic defaults derive from the rotated
-    frame automatically), and every later ingest/probe rotates its
-    batch/query set with the STORED rotation — so the recall lever of
-    OPQ composes with the static cell-pruned scan instead of the flat
-    per-query corpus scan of ``opq_probe``. Orthogonality preserves
-    every inner product and norm, so cell assignment semantics are
-    unchanged. A rotated index's meta records ``rotated=true``; a
-    build without ``rotation`` records false and ignores any rotation
-    table left by a previous rotated build (meta is authoritative)."""
-    from .similarity import rotate_vecs
-
-    # quantizer VERSION: bumped by every (re)build, stamped on every
-    # code row, filtered by every probe — a stale code (encoded under a
-    # previous quantizer pair) is structurally unscoreable, not just
-    # unlikely-by-convention. Read the old version BEFORE the run opens.
-    try:
-        qver = _ivfpq_meta(wh)["qver"] + 1
-    except ValueError:  # corrupt empty meta — this build replaces it
-        qver = 1
-    wh.begin_run(run_id)
-    rotated_cache = None
-    # try/finally so the corpus-sized rotated cache is released on ALL
-    # exits: an exception mid-build (e.g. a failed overwrite) would
-    # otherwise leak the persisted frame into executor storage for the
-    # session lifetime
-    try:
-        if rotation is not None:
-            wh.overwrite(LAYER, T_IVFPQ_ROT, _rot_df(wh.spark, rotation))
-            # everything downstream — default quantizers included — sees
-            # only the rotated frame, derived from the STORED rotation.
-            # Persisted: the assignment pass, the encode pass and the
-            # default-quantizer derivations all consume it — without the
-            # cache the rotation re-evaluates once per subtree (measured
-            # r14: the un-cached d=64 build ran >25 min at 2M vectors)
-            emb = rotate_vecs(
-                emb, _stored_rotation(wh, T_IVFPQ_ROT), vec_col=vec_col
-            ).persist()
-            rotated_cache = emb
-        _ivfpq_build_tail(
-            wh, emb, run_id, m, ksub, n_centroids, centroids, codebooks,
-            id_col, vec_col, residual, rotation, qver,
-        )
-    finally:
-        if rotated_cache is not None:
-            rotated_cache.unpersist()
-
-
-def _ivfpq_build_tail(
-    wh, emb, run_id, m, ksub, n_centroids, centroids, codebooks,
-    id_col, vec_col, residual, rotation, qver,
-) -> None:
-    """Quantizer derivation + encode + commit for :func:`ivfpq_build`
-    (split out so the build's try/finally stays readable)."""
-    from .similarity import (
-        pq_default_codebook, pq_encode, pq_subrows, residual_default_book,
-        residual_subrows,
-    )
-
-    if centroids is None:
-        centroids = emb.where(F.col(id_col) < n_centroids).select(
-            F.col(id_col).cast("int").alias("cid"),
-            F.col(vec_col).cast("array<double>").alias("cen_vec"),
-            norm(F.col(vec_col)).alias("cen_norm"),
-        )
-    else:
-        centroids = centroids.select(
-            F.col("cid").cast("int"),
-            F.col("cen_vec").cast("array<double>"),
-            "cen_norm",
-        )
-    wh.overwrite(LAYER, T_CENTROIDS, centroids)
-    # everything downstream derives from the STORED quantizers
-    cen = wh.read(LAYER, T_CENTROIDS)
-    cells = argmax_cell(_vrows(emb, id_col, vec_col), cen)
-    if residual:
-        rrows = residual_subrows(cells, cen, m)
-        if codebooks is None:
-            codebooks = residual_default_book(rrows, n_centroids, ksub)
-        else:
-            _check_book_m(codebooks, m)
-    elif codebooks is None:
-        codebooks = pq_default_codebook(emb, m, ksub, id_col, vec_col)
-    else:
-        _check_book_m(codebooks, m)
-    codebooks = codebooks.select(
-        F.col("sub").cast("int"),
-        F.col("cid").cast("int"),
-        F.col("cs").cast("array<double>"),
-    )
-    wh.overwrite(LAYER, T_PQ_CODEBOOK, codebooks)
-    book = wh.read(LAYER, T_PQ_CODEBOOK)
-    enc_rows = (
-        rrows.select("vid", "sub", "xs")
-        if residual
-        else pq_subrows(emb, m, id_col, vec_col)
-    )
-    codes = (
-        pq_encode(enc_rows, book)
-        .join(cells.select("vid", F.col("cid").alias("cell")), "vid")
-        .select(
-            "vid", "sub", "code",
-            F.lit(qver).cast("long").alias("qver"),
-            F.col("cell").alias("cid"),
-        )
-    )
-    # partitioned by coarse cell: a probe's cid-key join prunes the
-    # scan to its nprobe cells' files — the IVF access pattern as disk
-    # layout, exactly the ivf_assign discipline
-    wh.overwrite(LAYER, T_IVFPQ_CODES, codes, partition_by=["cid"])
-    wh.overwrite(
-        LAYER, T_IVFPQ_META,
-        wh.spark.createDataFrame(
-            [(residual, qver, rotation is not None)],
-            "residual boolean, qver long, rotated boolean",
-        ),
-    )
-    wh.commit_run(run_id)
+    ``similarity.opq_rotation``) builds OPQ × IVFADC (Ge et al. 2013
+    §4): both quantizers live in ROTATED space (explicit
+    ``centroids``/``codebooks`` must be rotated-space artifacts), and
+    every later ingest/probe rotates with the STORED rotation. A build
+    without ``rotation`` records rotated=false and ignores any
+    rotation table a previous build left (meta is authoritative)."""
+    spec = replace(IVFADC, rotate=rotation is not None,
+                   encode="residual" if residual else "raw")
+    _build(spec, wh, emb, run_id, m, ksub, n_centroids, centroids,
+           codebooks, rotation, id_col, vec_col)
 
 
 def ivfpq_ingest(
@@ -640,75 +668,10 @@ def ivfpq_ingest(
     vec_col: str = "embedding",
     commit: bool = True,
 ) -> DataFrame:
-    """Admit a vector batch: assign + encode ONLY the batch against the
-    stored (frozen) quantizers and append — O(batch·(K + m·ksub)) +
-    the replay-guard scan, independent of corpus size. IDEMPOTENT on
-    replay (the ann/dedup ingest contract): vids already coded are
-    skipped, duplicate vids within the batch collapse. Encoding mode
-    (raw vs residual, rotated or not) follows the STORED meta record,
-    so a batch admitted into a residual index is residual-encoded
-    against the same frozen quantizers and a batch admitted into a
-    rotated index is rotated with the STORED rotation first. Returns
-    the (vid, sub, code, cid) rows of the genuinely new vectors;
-    ``commit=False`` computes read-only."""
-    from .similarity import (
-        pq_encode, pq_subrows, residual_subrows, rotate_vecs,
-    )
-
-    cen = _require(wh.read(LAYER, T_CENTROIDS), T_CENTROIDS)
-    book = _require(wh.read(LAYER, T_PQ_CODEBOOK), T_PQ_CODEBOOK)
-    idx = _require(wh.read(LAYER, T_IVFPQ_CODES), T_IVFPQ_CODES)
-    batch = batch.dropDuplicates([id_col])
-    batch_ids = batch.select(F.col(id_col).alias("vid"))
-    already = idx.select("vid").join(
-        F.broadcast(batch_ids), ["vid"], "left_semi"
-    )
-    new_vecs = batch.join(
-        F.broadcast(already),
-        batch[id_col] == already["vid"],
-        "left_anti",
-    )
-    m = _pq_m(book)
-    meta = _ivfpq_meta(wh)  # one 1-row read: mode + version + rotation
-    if meta["rotated"]:
-        # rotated index: assignment and encoding both happen in the
-        # SAME rotated space the stored quantizers were trained in
-        new_vecs = rotate_vecs(
-            new_vecs, _stored_rotation(wh, T_IVFPQ_ROT), vec_col=vec_col
-        )
-    cells = argmax_cell(_vrows(new_vecs, id_col, vec_col), cen)
-    enc_rows = (
-        residual_subrows(cells, cen, m).select("vid", "sub", "xs")
-        if meta["residual"]
-        else pq_subrows(new_vecs, m, id_col, vec_col)
-    )
-    coded = (
-        pq_encode(enc_rows, book)
-        .join(cells.select("vid", F.col("cid").alias("cell")), "vid")
-        .select(
-            "vid", "sub", "code",
-            F.lit(meta["qver"]).cast("long").alias("qver"),
-            F.col("cell").alias("cid"),
-        )
-    )
-    if "qver" not in idx.columns:
-        # pre-qver index (single legacy build = implicit version 0):
-        # Warehouse.read does not mergeSchema, so stamping new rows
-        # would make the union's schema file-order dependent — and if
-        # qver DID surface, every legacy row would read NULL and the
-        # probe's equality filter would silently exclude the original
-        # corpus from results. Keep the legacy schema uniform; probes
-        # skip the version filter when the column is absent.
-        coded = coded.drop("qver")
-    if not commit:
-        return coded
-    if run_id is None:
-        raise ValueError("run_id is required when commit=True")
-    coded = coded.localCheckpoint()  # one eager pass feeds append + return
-    wh.begin_run(run_id)
-    wh.append(LAYER, T_IVFPQ_CODES, coded, partition_by=["cid"])
-    wh.commit_run(run_id)
-    return coded
+    """IVFADC admission: assign + encode ONLY the batch against the
+    stored quantizers in the stored mode (raw or residual, rotated or
+    not) and append. Returns the new (vid, sub, code, qver, cid) rows."""
+    return _ingest(IVFADC, wh, batch, run_id, id_col, vec_col, commit)
 
 
 def ivfpq_rebuild(
@@ -724,66 +687,14 @@ def ivfpq_rebuild(
     vec_col: str = "embedding",
     rotation: list[list[float]] | None = None,
 ) -> None:
-    """Quantizer REBUILD-BY-REPLACEMENT for the IVFADC index — the
-    lifecycle step the frozen-quantizer ingest contract defers drift
-    correction to (the ivf ``rebuild`` discipline). Unlike the IVF
-    index, the code table cannot reconstruct its vectors (that IS the
-    compression), so rebuild takes the corpus frame ``emb`` — at 100 TB
-    that is the warehouse vector table, read once.
-
-    - retrains the coarse quantizer (MLlib KMeans via
-      ``similarity.kmeans_centroids``) unless an explicit ``centroids``
-      frame is supplied,
-    - keeps the STORED encoding mode (a residual index rebuilds as
-      residual — the codes are coupled to the coarse quantizer, which
-      is exactly why rebuild must re-encode them; a ROTATED index
-      retrains its OPQ rotation over the current corpus unless an
-      explicit ``rotation`` is supplied, and the coarse quantizer is
-      then trained in the NEW rotated space),
-    - delegates to :func:`ivfpq_build`: every code row is re-encoded
-      under the new quantizers and stamped with the BUMPED quantizer
-      version, and all four tables swap under one atomic commit —
-      readers observe either (old quantizers, old codes) or (new, new).
-
-    Belt and braces: even if a stale code row somehow survived (an
-    append racing the rebuild), probes filter codes to the current
-    stored ``qver``, so scoring batch-A codes against a batch-B LUT is
-    structurally impossible (pinned in test_ann_index.py)."""
-    meta = _ivfpq_meta(wh)
-    if meta["rotated"] and rotation is None:
-        if centroids is not None:
-            # the caller's centroids live in SOME rotated space, but
-            # the rotation about to be retrained below doesn't exist
-            # yet — pairing a fresh rotation with stale-space centroids
-            # degrades recall silently (the index stays self-consistent,
-            # so bit-equality pins can't catch it). Require the rotation
-            # alongside rotated-space centroids.
-            raise ValueError(
-                "rebuilding a ROTATED index with explicit centroids "
-                "requires the matching rotation: pass rotation= "
-                "alongside centroids=, or pass neither to retrain both"
-            )
-        from .similarity import opq_rotation
-
-        rotation = opq_rotation(emb, m, vec_col)
-    if centroids is None:
-        from .similarity import kmeans_centroids, rotate_vecs
-
-        train = (
-            rotate_vecs(emb, rotation, vec_col=vec_col)
-            if rotation is not None
-            else emb
-        )
-        centroids = kmeans_centroids(
-            train.select(F.col(vec_col).alias("embedding")),
-            n_centroids=n_centroids,
-        )
-    ivfpq_build(
-        wh, emb, run_id, m=m, ksub=ksub, n_centroids=n_centroids,
-        centroids=centroids, codebooks=codebooks,
-        id_col=id_col, vec_col=vec_col, residual=meta["residual"],
-        rotation=rotation,
-    )
+    """IVFADC rebuild over the corpus frame ``emb``, keeping the stored
+    encoding mode: the coarse quantizer is retrained (MLlib KMeans)
+    unless ``centroids`` is supplied, and a ROTATED index retrains its
+    rotation too unless ``rotation`` is supplied. Probes filter codes
+    to the current ``qver``, so even a stale row that survived (an
+    append racing the rebuild) is never scored."""
+    _rebuild(IVFADC, wh, emb, run_id, m, ksub, n_centroids, centroids,
+             codebooks, rotation, id_col, vec_col)
 
 
 def ivfpq_probe(
@@ -794,201 +705,11 @@ def ivfpq_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVFADC search against the stored index — READ-ONLY: rank the
-    bounded query set against the broadcast stored centroids, build the
-    ADC lookup table from the broadcast stored codebook, then score
-    ONLY the nprobe probed cells' code rows (a static ``cid IN``
-    partition filter prunes the cid-partitioned code table at
-    file-listing time — plan- and metric-pinned in test_ann_index.py) and two-level top-k over cell-local
-    candidates. Results identical to similarity.ivfpq_topk given the
-    same quantizers (residual indexes: to ivfpq_residual_topk — the
-    stored meta record selects the scoring decomposition, so callers
-    never pass an encoding flag that could silently mismatch the
-    codes). This is the plan flat pq_probe cannot have: no per-query
-    corpus-sized scan, no corpus-sized rank partition.
-
-    EAGER: the probed-cell set is collected at call time to build the
-    static partition filter (see _static_cell_filter), so a bounded
-    Spark job runs even if the returned frame is never evaluated."""
-    from .similarity import (
-        pq_adc_rank_cells, pq_lut, pq_subrows, residual_query_cells,
-    )
-
-    cen = _require(wh.read(LAYER, T_CENTROIDS), T_CENTROIDS)
-    book = _require(wh.read(LAYER, T_PQ_CODEBOOK), T_PQ_CODEBOOK)
-    codes = _require(wh.read(LAYER, T_IVFPQ_CODES), T_IVFPQ_CODES)
-    m = _pq_m(book)
-    meta = _ivfpq_meta(wh)  # one 1-row read: mode + version + rotation
-    if meta["rotated"]:
-        # rotated index (OPQ × IVFADC): the query set is rotated with
-        # the STORED rotation — d ≤ 16 as codegen folds over Q rows,
-        # d > 16 through ONE Arrow node over the bounded query frame
-        # (_rotate_queries_local) — zero per-candidate cost either
-        # way, then searched exactly like an unrotated index;
-        # orthogonality preserves inner products, so centroid ranking
-        # and ADC scoring are semantically unchanged
-        queries = _rotate_queries_local(
-            queries, _stored_rotation(wh, T_IVFPQ_ROT), id_col, vec_col
-        )
-    if "qver" in codes.columns:
-        # score ONLY codes encoded under the CURRENT quantizer version:
-        # a stale row (e.g. an append that raced a rebuild) is filtered
-        # at the parquet scan (pushed predicate + row-group stats), not
-        # silently ADC-scored against the wrong LUT — wrong-distance
-        # answers are the failure mode this makes structural.
-        # (pre-qver indexes have no column; their single build is v0)
-        codes = codes.where(F.col("qver") == F.lit(meta["qver"]))
-    if meta["residual"]:
-        q_cells = (
-            residual_query_cells(queries, cen, nprobe, id_col, vec_col)
-            .withColumnRenamed("cell", "cid")
-            .localCheckpoint()  # one eager pass shared by filter + join
-        )
-        lut = pq_lut(pq_subrows(queries, m, id_col, vec_col), book)
-        cand = (
-            _static_cell_filter(codes, q_cells)
-            .join(F.broadcast(q_cells), "cid")
-            .select("query_id", "vid", "sub", "code", "qc")
-        )
-        return pq_adc_rank_cells(cand, lut, m, k, qc_col="qc")
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("qa_cos").desc(), F.col("cid")
-    )
-    q_cells = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        )
-        .crossJoin(F.broadcast(cen))
-        .select(
-            "query_id", "cid",
-            (dot(F.col("q_vec"), F.col("cen_vec"))
-             / (F.col("q_norm") * F.col("cen_norm"))).alias("qa_cos"),
-        )
-        .withColumn("_qrn", F.row_number().over(w_cells))
-        .where(F.col("_qrn") <= nprobe)
-        .select("query_id", "cid")
-        .localCheckpoint()  # one eager pass shared by filter + join
-    )
-    lut = pq_lut(pq_subrows(queries, m, id_col, vec_col), book)
-    cand = (
-        _static_cell_filter(codes, q_cells)
-        .join(F.broadcast(q_cells), "cid")
-        .select("query_id", "vid", "sub", "code")
-    )
-    return pq_adc_rank_cells(cand, lut, m, k)
-
-
-def pq_probe(
-    wh,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC search against the stored index — READ-ONLY: build the
-    per-query lookup table from the bounded query set × the stored
-    codebook (broadcast), score the stored CODE rows (integer joins,
-    no float vectors), per-query top-k. Results identical to
-    similarity.pq_adc_topk given the same codebook (pinned by
-    test_ann_index.py)."""
-    from .similarity import pq_adc_rank, pq_lut, pq_subrows
-
-    cen = _require(wh.read(LAYER, T_PQ_CODEBOOK), T_PQ_CODEBOOK)
-    codes = _require(wh.read(LAYER, T_PQ_CODES), T_PQ_CODES)
-    m = _pq_m(cen)
-    lut = pq_lut(pq_subrows(queries, m, id_col, vec_col), cen)
-    return pq_adc_rank(codes, lut, m, k)
-
-
-# ---------------------------------------------------------------------------
-# Persisted OPQ index: the rotation "folds into the stored codes" made
-# literal — the orthogonal OPQ rotation (Ge et al. 2013; trained once,
-# similarity.opq_rotation) is a warehouse table beside the codebook
-# and the code table, all under one atomic commit, so ingest and probe
-# provably apply the SAME rotation the codes were encoded under. An
-# index whose queries were rotated differently than its codes would
-# silently return wrong neighbors — the same failure class the IVFADC
-# quantizer-version stamp closes, here closed by construction (the
-# rotation has no drift lifecycle: it is frozen with the codebook and
-# replaced only by a full re-build).
-# ---------------------------------------------------------------------------
-
-T_OPQ_ROT = "opq_rotation"
-T_OPQ_BOOK = "opq_codebook"
-T_OPQ_CODES = "opq_codes"
-T_OPQ_META = "opq_meta"
-
-
-def _opq_meta(wh) -> dict:
-    """Stored flat-OPQ index metadata — ONE 1-row read (bounded-collect
-    class): ``qver``, the rotation/codebook VERSION the stored codes
-    were encoded under. Same contract as the IVFADC ``_ivfpq_meta``:
-    bumped by every build/rebuild, stamped on every code row, filtered
-    by every probe — a code encoded under rotation A can never be
-    ADC-scored against rotation B's LUT (an append racing a rebuild,
-    a partial restore). Pre-meta indexes are version 0; an
-    existing-but-EMPTY meta table is corrupt warehouse state."""
-    meta = wh.read(LAYER, T_OPQ_META)
-    if meta is None:
-        return {"qver": 0}
-    row = meta.first()
-    if row is None:
-        raise ValueError(
-            f"OPQ index metadata corrupt: {LAYER}.{T_OPQ_META} exists "
-            f"but holds no row — the atomic commit should make this "
-            f"impossible; rebuild the index (ann_index.opq_build)"
-        )
-    return {"qver": int(row.asDict().get("qver") or 0)}
-
-
-def _stored_rotation(wh, table: str = T_OPQ_ROT) -> list[list[float]]:
-    """The stored rotation (flat-OPQ or rotated-IVFADC table), ordered
-    by output coordinate — a d-row bounded metadata collect (d =
-    embedding dim, e.g. 64)."""
-    rot = _require(wh.read(LAYER, table), table)
-    return [list(r["r"]) for r in rot.orderBy("j").collect()]
-
-
-def _rot_df(spark, rotation: list[list[float]]) -> DataFrame:
-    """A d×d rotation as its warehouse frame (j = output coordinate)."""
-    return spark.createDataFrame(
-        [(j, [float(x) for x in row]) for j, row in enumerate(rotation)],
-        "j int, r array<double>",
-    )
-
-
-def _rotate_queries_local(
-    queries: DataFrame,
-    rotation: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Rotate a BOUNDED query set with the stored rotation.
-
-    d ≤ 16 delegates to rotate_vecs' JVM fold path (Python-free, zero
-    extra jobs, bit-locked to the oracle). d > 16 uses rotate_vecs'
-    Arrow pandas_udf path — ONE ArrowEvalPython node over the bounded
-    query frame, O(query set) at any scale.
-
-    History: r15 replaced the d>16 path with a driver-side
-    collect + numpy GEMM + createDataFrame to keep probe plans
-    Python-free (r14 ADVICE). Both independent r15 bench records put
-    the two OPQ probe queries ABOVE their r14 medians, and the r16
-    same-boot interleaved A/B confirmed the collect path is the slower
-    one at fixture scale (q_ann_opq_ivf 3.07 s driver-side vs 2.45 s
-    Arrow; q_ann_opq_index 1.98 vs 1.80; medians of 6 interleaved
-    samples — commit b42adcb): the eager collect +
-    local-relation rebuild costs more wall time than the Arrow node it
-    removed, and since the rotation only ever touches the bounded
-    query set, the Python round trip it reintroduces is
-    scale-independent. Measured over plan aesthetics (guide §1.1), so
-    the Arrow path is restored; results are bit-identical either way
-    (same float64 GEMM — pinned by the r15 equality tests)."""
-    from .similarity import rotate_vecs
-
-    return rotate_vecs(queries, rotation, vec_col=vec_col)
+    """IVFADC search: ADC-score ONLY the nprobe probed cells' code rows
+    (static ``cid IN`` partition filter) — identical to
+    ``similarity.ivfpq_topk`` (residual indexes:
+    ``ivfpq_residual_topk``) given the same quantizers."""
+    return _probe(IVFADC, wh, queries, k, nprobe, id_col, vec_col)
 
 
 def opq_build(
@@ -1002,66 +723,14 @@ def opq_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Initial (or re-)build: rotation + codebook + full-corpus codes
-    under ONE atomic commit. ``rotation`` defaults to
-    ``similarity.opq_rotation`` (PCA + round-constrained eigenvalue
-    allocation) over the corpus; ``codebooks`` defaults to per-subspace
-    Lloyd codebooks trained on the ROTATED corpus — the configuration
-    OPQ exists for (there is no oracle ambition here: PCA is already
-    not oracle-expressible, so the catalog query is rows-only and the
-    correctness story is the bit-equality pins against the session
-    operator). The stored codes never carry floats; encoding derives
-    from the STORED rotation and book, not the in-memory ones. Every
-    code row is stamped with the bumped rotation/codebook version
-    (``qver`` — the _opq_meta lifecycle, mirroring the IVFADC stamp),
-    so a row encoded under a previous build is structurally
-    unscoreable by later probes."""
-    from .similarity import (
-        opq_rotation, pq_codebooks_kmeans, pq_encode, pq_subrows,
-        rotate_vecs,
-    )
-
-    if rotation is None:
-        rotation = opq_rotation(emb, m, vec_col)
-    try:
-        qver = _opq_meta(wh)["qver"] + 1
-    except ValueError:  # corrupt empty meta — this build replaces it
-        qver = 1
-    wh.begin_run(run_id)
-    wh.overwrite(LAYER, T_OPQ_ROT, _rot_df(emb.sparkSession, rotation))
-    # persisted: codebook training and the encode pass both consume the
-    # rotated corpus (the ivfpq_build single-evaluation discipline);
-    # try/finally so a failed overwrite can't leak the corpus-sized
-    # cache into executor storage for the session lifetime
-    rotated = rotate_vecs(emb, _stored_rotation(wh), vec_col=vec_col).persist()
-    try:
-        if codebooks is None:
-            codebooks = pq_codebooks_kmeans(rotated, m=m, ksub=ksub,
-                                            vec_col=vec_col)
-        else:
-            _check_book_m(codebooks, m)
-        wh.overwrite(
-            LAYER, T_OPQ_BOOK,
-            codebooks.select(
-                F.col("sub").cast("int"),
-                F.col("cid").cast("int"),
-                F.col("cs").cast("array<double>"),
-            ),
-        )
-        book = wh.read(LAYER, T_OPQ_BOOK)
-        wh.overwrite(
-            LAYER, T_OPQ_CODES,
-            pq_encode(pq_subrows(rotated, m, id_col, vec_col), book).select(
-                "vid", "sub", "code", F.lit(qver).cast("long").alias("qver")
-            ),
-        )
-        wh.overwrite(
-            LAYER, T_OPQ_META,
-            wh.spark.createDataFrame([(qver,)], "qver long"),
-        )
-        wh.commit_run(run_id)
-    finally:
-        rotated.unpersist()
+    """Flat OPQ build: rotation + codebook + codes under one commit.
+    ``rotation`` defaults to ``similarity.opq_rotation`` over the
+    corpus, ``codebooks`` to per-subspace Lloyd codebooks trained on
+    the ROTATED corpus (PCA is not oracle-expressible, so the
+    correctness story is bit-equality against
+    ``similarity.opq_adc_topk``)."""
+    _build(OPQ, wh, emb, run_id, m=m, ksub=ksub, codebooks=codebooks,
+           rotation=rotation, id_col=id_col, vec_col=vec_col)
 
 
 def opq_ingest(
@@ -1072,44 +741,10 @@ def opq_ingest(
     vec_col: str = "embedding",
     commit: bool = True,
 ) -> DataFrame:
-    """Admit a vector batch: rotate with the STORED rotation, encode
-    against the STORED (frozen) codebook, append — O(batch·(d² +
-    m·ksub)) plus the replay-guard scan, independent of corpus size.
-    IDEMPOTENT on replay (the ann/dedup ingest contract): vids already
-    coded are skipped, duplicate vids within the batch collapse."""
-    from .similarity import pq_encode, pq_subrows, rotate_vecs
-
-    rot = _stored_rotation(wh)
-    book = _require(wh.read(LAYER, T_OPQ_BOOK), T_OPQ_BOOK)
-    idx = _require(wh.read(LAYER, T_OPQ_CODES), T_OPQ_CODES)
-    batch = batch.dropDuplicates([id_col])
-    batch_ids = batch.select(F.col(id_col).alias("vid"))
-    already = idx.select("vid").join(
-        F.broadcast(batch_ids), ["vid"], "left_semi"
-    )
-    m = _pq_m(book)
-    new_rows = pq_subrows(
-        rotate_vecs(batch, rot, vec_col=vec_col), m, id_col, vec_col
-    ).join(F.broadcast(already), ["vid"], "left_anti")
-    coded = pq_encode(new_rows, book).select(
-        "vid", "sub", "code",
-        F.lit(_opq_meta(wh)["qver"]).cast("long").alias("qver"),
-    )
-    if "qver" not in idx.columns:
-        # pre-qver index: keep the legacy schema uniform (the ivfpq
-        # ingest rationale — Warehouse.read does not mergeSchema, and
-        # a surfaced qver column would NULL out every legacy row under
-        # the probe's equality filter)
-        coded = coded.drop("qver")
-    if not commit:
-        return coded
-    if run_id is None:
-        raise ValueError("run_id is required when commit=True")
-    coded = coded.localCheckpoint()  # one eager pass feeds append + return
-    wh.begin_run(run_id)
-    wh.append(LAYER, T_OPQ_CODES, coded)
-    wh.commit_run(run_id)
-    return coded
+    """Flat OPQ admission: rotate with the STORED rotation, encode
+    against the stored codebook, append. Returns the new
+    (vid, sub, code, qver) rows."""
+    return _ingest(OPQ, wh, batch, run_id, id_col, vec_col, commit)
 
 
 def opq_rebuild(
@@ -1123,25 +758,11 @@ def opq_rebuild(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Rotation/codebook REBUILD-BY-REPLACEMENT for the flat OPQ index
-    — the lifecycle step the frozen-artifact ingest contract defers
-    drift correction to (the ivfpq_rebuild discipline). The code table
-    cannot reconstruct its vectors (that IS the compression), so
-    rebuild takes the corpus frame ``emb`` — at 100 TB that is the
-    warehouse vector table, read once. Delegates to :func:`opq_build`,
-    which retrains the PCA rotation over the CURRENT corpus and the
-    rotated-space codebooks (unless explicit ones are supplied),
-    re-encodes every row under the BUMPED ``qver``, and swaps all four
-    tables under one atomic commit — readers observe either (old
-    rotation, old book, old codes) or (new, new, new). Belt and
-    braces: even if a stale code row somehow survived (an append
-    racing the rebuild), probes filter codes to the current stored
-    ``qver`` (pinned in test_ann_index.py)."""
-    _require(wh.read(LAYER, T_OPQ_CODES), T_OPQ_CODES)  # rebuild, not build
-    opq_build(
-        wh, emb, run_id, m=m, ksub=ksub, rotation=rotation,
-        codebooks=codebooks, id_col=id_col, vec_col=vec_col,
-    )
+    """Flat OPQ rebuild over the corpus frame ``emb``: retrains the
+    rotation and codebooks (unless supplied) and re-encodes every row
+    under the bumped ``qver``."""
+    _rebuild(OPQ, wh, emb, run_id, m, ksub, codebooks=codebooks,
+             rotation=rotation, id_col=id_col, vec_col=vec_col)
 
 
 def opq_probe(
@@ -1151,30 +772,8 @@ def opq_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """OPQ-ADC search against the stored index — READ-ONLY: rotate the
-    bounded query set with the STORED rotation (d ≤ 16: codegen folds
-    over Q rows; d > 16: one Arrow node over the bounded query frame —
-    _rotate_queries_local), build the LUT from the stored codebook,
-    score the stored integer code rows, two-level top-k. Queries and
-    codes share one rotation by construction; results identical to
-    similarity.opq_adc_topk given the same rotation and codebooks
-    (pinned in test_ann_index.py).
-
-    NOTE this is the flat-ADC BASELINE: the score pass scans every
-    stored code row per query set. The production composition is
-    ivfpq_build(rotation=...) + ivfpq_probe — the same rotation with
-    the cell-pruned scan (q_ann_opq_ivf)."""
-    from .similarity import pq_adc_rank, pq_lut, pq_subrows
-
-    rot = _stored_rotation(wh)
-    book = _require(wh.read(LAYER, T_OPQ_BOOK), T_OPQ_BOOK)
-    codes = _require(wh.read(LAYER, T_OPQ_CODES), T_OPQ_CODES)
-    if "qver" in codes.columns:
-        # score ONLY codes encoded under the CURRENT rotation/codebook
-        # version (pushed parquet predicate — the IVFADC qver
-        # discipline); pre-qver indexes have no column, single build
-        codes = codes.where(F.col("qver") == F.lit(_opq_meta(wh)["qver"]))
-    m = _pq_m(book)
-    rq = _rotate_queries_local(queries, rot, id_col, vec_col)
-    lut = pq_lut(pq_subrows(rq, m, id_col, vec_col), book)
-    return pq_adc_rank(codes, lut, m, k)
+    """Flat OPQ-ADC search — identical to ``similarity.opq_adc_topk``
+    given the same rotation and codebooks. The flat BASELINE: every
+    stored code row is scored per query set; the production
+    composition is ``ivfpq_build(rotation=...)`` + ``ivfpq_probe``."""
+    return _probe(OPQ, wh, queries, k, 0, id_col, vec_col)

@@ -120,8 +120,8 @@ def build(
     fps = _fps(docs, normalize=normalize).persist()
     wh.begin_run(run_id)
     wh.overwrite(LAYER, T_SHINGLES, fps)
-    # banding consumes the cached fingerprints (materialized by the
-    # overwrite's validation count) instead of re-shingling the corpus
+    # banding consumes the cached fingerprints (filled by the shingle
+    # overwrite's write job) instead of re-shingling the corpus
     wh.overwrite(LAYER, T_BANDS, _bands_of(fps, num_hashes, bands))
     wh.commit_run(run_id)
     fps.unpersist()

@@ -330,6 +330,82 @@ def argmax_cell(vectors: DataFrame, cen: DataFrame) -> DataFrame:
     )
 
 
+def vec_rows(
+    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """(vid, vec, vnorm): the row shape :func:`argmax_cell` assigns."""
+    return emb.select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
+        norm(F.col(vec_col)).alias("vnorm"),
+    )
+
+
+def lowest_id_centroids(
+    emb: DataFrame,
+    n_centroids: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(cid, cen_vec, cen_norm): the deterministic, oracle-expressible
+    coarse quantizer — the ``n_centroids`` lowest-id vectors."""
+    return emb.where(F.col(id_col) < n_centroids).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cen_vec"),
+        norm(F.col(vec_col)).alias("cen_norm"),
+    )
+
+
+def probe_cells(
+    queries: DataFrame,
+    cen: DataFrame,
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(query_id, q_vec, q_norm, cid, qc): each query's ``nprobe``
+    nearest coarse cells — cosine rank, min-cid ties — carrying the
+    residual-ADC base term qc = ⟨q, c⟩. The query set is filtered
+    BEFORE ranking, so the window only sees a bounded Q·K frame."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("qa_cos").desc(), F.col("cid")
+    )
+    return (
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
+            norm(F.col(vec_col)).alias("q_norm"),
+        )
+        .crossJoin(F.broadcast(cen))
+        .select(
+            "query_id", "q_vec", "q_norm", "cid",
+            dot(F.col("q_vec"), F.col("cen_vec")).alias("qc"),
+            (dot(F.col("q_vec"), F.col("cen_vec"))
+             / (F.col("q_norm") * F.col("cen_norm"))).alias("qa_cos"),
+        )
+        .withColumn("_qrn", F.row_number().over(w))
+        .where(F.col("_qrn") <= nprobe)
+        .drop("qa_cos", "_qrn")
+    )
+
+
+def ivf_rank(assigned: DataFrame, q_cells: DataFrame, k: int) -> DataFrame:
+    """Cell-local exact cosine top-k: ``assigned`` (vid, vec, vnorm,
+    cid) rows meet the broadcast :func:`probe_cells` frame on cid.
+    Candidates live in exactly one cell, so no (query, candidate) pair
+    scores twice and no dedup pass is needed."""
+    q = q_cells.select("query_id", "q_vec", "q_norm", "cid")
+    scored = (
+        assigned.join(F.broadcast(q), ["cid"])
+        .where(F.col("vid") != F.col("query_id"))
+        .select(
+            "query_id", F.col("vid").alias("cand_id"),
+            (dot(F.col("q_vec"), F.col("vec"))
+             / (F.col("q_norm") * F.col("vnorm"))).alias("cos"),
+        )
+    )
+    return topk_per_query(
+        scored, k, [F.col("cos").desc(), F.col("cand_id")]
+    ).select("query_id", "cand_id", "rnk", "cos")
+
+
 def kmeans_centroids(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -386,51 +462,11 @@ def ivf_topk(
 
     Pass ``centroids`` (e.g. from kmeans_centroids) to use a trained
     coarse quantizer instead; everything downstream is unchanged."""
-    cen = centroids if centroids is not None else emb.where(
-        f"{id_col} < {n_centroids}"
-    ).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cen_vec"),
-        norm(F.col(vec_col)).alias("cen_norm"),
+    cen = centroids if centroids is not None else lowest_id_centroids(
+        emb, n_centroids, id_col, vec_col
     )
-    base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("vnorm"),
-    )
-    assigned = argmax_cell(base, cen)
-    w_qrank = Window.partitionBy("vid").orderBy(F.col("a_cos").desc(), F.col("cid"))
-    q = (
-        emb.where(query_pred)
-        .select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-            norm(F.col(vec_col)).alias("vnorm"),
-        )
-        .crossJoin(F.broadcast(cen))
-        .select(
-            "vid", "vec", "vnorm", "cid",
-            (dot(F.col("vec"), F.col("cen_vec")) / (F.col("vnorm") * F.col("cen_norm"))).alias("a_cos"),
-        )
-        .withColumn("arn", F.row_number().over(w_qrank))
-        .where(F.col("arn") <= nprobe)
-        .select(
-            F.col("vid").alias("query_id"), F.col("vec").alias("q_vec"),
-            F.col("vnorm").alias("q_norm"), "cid",
-        )
-    )
-    c = assigned.select(
-        F.col("vid").alias("cand_id"), F.col("vec").alias("c_vec"),
-        F.col("vnorm").alias("c_norm"), "cid",
-    )
-    scored = (
-        c.join(F.broadcast(q), ["cid"])
-        .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id", "cand_id",
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-    )
-    return topk_per_query(
-        scored, k, [F.col("cos").desc(), F.col("cand_id")]
-    ).select("query_id", "cand_id", "rnk", "cos")
+    q_cells = probe_cells(emb.where(query_pred), cen, nprobe, id_col, vec_col)
+    return ivf_rank(argmax_cell(vec_rows(emb, id_col, vec_col), cen), q_cells, k)
 
 
 def semantic_dedup_cells(
@@ -813,6 +849,16 @@ def pq_adc_topk(
     return pq_adc_rank(codes, lut, m, k)
 
 
+def _subvecs(col: str, m: int) -> Column:
+    """The m equal slices of an array column (a remainder of d mod m
+    trailing dims is dropped)."""
+    dsub = (F.size(F.col(col)) / m).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda s: F.slice(F.col(col), s * dsub + 1, dsub),
+    )
+
+
 def pq_subrows(
     emb: DataFrame,
     m: int,
@@ -820,13 +866,9 @@ def pq_subrows(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vid, sub, xs): each vector exploded into its m subvectors."""
-    dsub = (F.size(F.col(vec_col)) / m).cast("int")
-    subs = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.slice(F.col(vec_col), s * dsub + 1, dsub),
-    )
     return emb.select(
-        F.col(id_col).alias("vid"), F.posexplode(subs).alias("sub", "xs")
+        F.col(id_col).alias("vid"),
+        F.posexplode(_subvecs(vec_col, m)).alias("sub", "xs"),
     )
 
 
@@ -839,13 +881,9 @@ def pq_default_codebook(
 ) -> DataFrame:
     """(sub, cid, cs): the deterministic oracle-expressible codebook —
     subvectors of the ``ksub`` lowest-id vectors."""
-    dsub = (F.size(F.col(vec_col)) / m).cast("int")
-    subs = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.slice(F.col(vec_col), s * dsub + 1, dsub),
-    )
     return emb.where(f"{id_col} < {ksub}").select(
-        F.col(id_col).alias("cid"), F.posexplode(subs).alias("sub", "cs")
+        F.col(id_col).alias("cid"),
+        F.posexplode(_subvecs(vec_col, m)).alias("sub", "cs"),
     )
 
 
@@ -933,38 +971,38 @@ def pq_adc_rank(
 
 
 def pq_adc_rank_cells(
-    cand_codes: DataFrame,
+    codes: DataFrame,
+    q_cells: DataFrame,
     lut: DataFrame,
     m: int,
     k: int,
-    qc_col: str | None = None,
+    residual: bool = False,
 ) -> DataFrame:
-    """Cell-pruned ADC: ``cand_codes`` is (query_id, vid, sub, code) —
-    code rows already restricted to each query's probed coarse cells —
-    so the LUT join and the rank only ever see cell-local candidates.
-    The LUT join adds query_id to the equi-key (a candidate row exists
-    PER query here, unlike the flat path where one code row fans out
-    to every query). ``qc_col`` optionally names a carried
-    per-(query, cell) column added first into the score (residual
-    ADC's ⟨q, c(x)⟩ term)."""
+    """Cell-pruned ADC: ``codes`` (vid, sub, code, cid) meet each
+    query's probed cells (the broadcast :func:`probe_cells` frame) on
+    cid, so the LUT join and the rank only ever see cell-local
+    candidates. The LUT join adds query_id to the equi-key (a
+    candidate row exists PER query here, unlike the flat path where
+    one code row fans out to every query). ``residual`` adds the
+    carried per-(query, cell) term qc = ⟨q, c(x)⟩ first into the score
+    (residual ADC)."""
+    qc = ["qc"] if residual else []
     lut2 = lut.select(
         F.col("query_id").alias("_lq"), F.col("sub").alias("_ls"),
         F.col("cid").alias("_lc"), "pd",
     )
-    keep = ["query_id", "vid", F.col("sub").alias("s"), "pd"]
-    if qc_col is not None:
-        keep.append(qc_col)
     parts = (
-        cand_codes.join(
+        codes.join(F.broadcast(q_cells.select("query_id", "cid", *qc)), "cid")
+        .join(
             F.broadcast(lut2),
             (F.col("query_id") == F.col("_lq"))
             & (F.col("sub") == F.col("_ls"))
             & (F.col("code") == F.col("_lc")),
         )
         .where(F.col("vid") != F.col("query_id"))
-        .select(*keep)
+        .select("query_id", "vid", F.col("sub").alias("s"), "pd", *qc)
     )
-    return _adc_pivot_topk(parts, m, k, base_col=qc_col)
+    return _adc_pivot_topk(parts, m, k, base_col="qc" if residual else None)
 
 
 def ivfpq_topk(
@@ -1010,48 +1048,10 @@ def ivfpq_topk(
     ``centroids`` (cid, cen_vec, cen_norm) and ``codebooks``
     (sub, cid, cs) accept trained quantizers (kmeans_centroids /
     pq_codebooks_kmeans); everything downstream is unchanged."""
-    cen = centroids if centroids is not None else emb.where(
-        f"{id_col} < {n_centroids}"
-    ).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cen_vec"),
-        norm(F.col(vec_col)).alias("cen_norm"),
+    return _ivfadc_topk(
+        emb, k, m, ksub, n_centroids, nprobe, query_pred, id_col, vec_col,
+        centroids, codebooks, residual=False,
     )
-    base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("vnorm"),
-    )
-    cells = argmax_cell(base, cen).select("vid", "cid")
-    rows = pq_subrows(emb, m, id_col, vec_col)
-    book = (
-        codebooks
-        if codebooks is not None
-        else pq_default_codebook(emb, m, ksub, id_col, vec_col)
-    )
-    codes = pq_encode(rows, book).join(cells, "vid")
-    queries = emb.where(query_pred)
-    w_qrank = Window.partitionBy("query_id").orderBy(
-        F.col("qa_cos").desc(), F.col("cid")
-    )
-    q_cells = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        )
-        .crossJoin(F.broadcast(cen))
-        .select(
-            "query_id", "cid",
-            (dot(F.col("q_vec"), F.col("cen_vec"))
-             / (F.col("q_norm") * F.col("cen_norm"))).alias("qa_cos"),
-        )
-        .withColumn("_qrn", F.row_number().over(w_qrank))
-        .where(F.col("_qrn") <= nprobe)
-        .select("query_id", "cid")
-    )
-    lut = pq_lut(pq_subrows(queries, m, id_col, vec_col), book)
-    cand = codes.join(F.broadcast(q_cells), "cid").select(
-        "query_id", "vid", "sub", "code"
-    )
-    return pq_adc_rank_cells(cand, lut, m, k)
 
 
 def ivfpq_residual_topk(
@@ -1086,51 +1086,78 @@ def ivfpq_residual_topk(
     double addition order is engine-identical. Scale shape identical
     to :func:`ivfpq_topk`: map-side assignment aggregate, integer
     code joins restricted to the probed cells, two-level top-k."""
-    cen = emb.where(f"{id_col} < {n_centroids}").select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cen_vec"),
-        norm(F.col(vec_col)).alias("cen_norm"),
+    return _ivfadc_topk(
+        emb, k, m, ksub, n_centroids, nprobe, query_pred, id_col, vec_col,
+        None, None, residual=True,
     )
-    base = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("vnorm"),
+
+
+def _ivfadc_topk(
+    emb, k, m, ksub, n_centroids, nprobe, query_pred, id_col, vec_col,
+    centroids, codebooks, residual,
+) -> DataFrame:
+    cen = centroids if centroids is not None else lowest_id_centroids(
+        emb, n_centroids, id_col, vec_col
     )
-    cells = argmax_cell(base, cen)
-    rrows = residual_subrows(cells, cen, m)
-    book = residual_default_book(rrows, n_centroids, ksub)
-    codes = pq_encode(rrows.select("vid", "sub", "xs"), book).join(
-        cells.select("vid", F.col("cid").alias("cell")), "vid"
-    )
+    if codebooks is not None:
+        book = codebooks
+    elif residual:
+        book = residual_default_book(emb, cen, m, n_centroids, ksub, id_col, vec_col)
+    else:
+        book = pq_default_codebook(emb, m, ksub, id_col, vec_col)
     queries = emb.where(query_pred)
-    q_cells = residual_query_cells(queries, cen, nprobe, id_col, vec_col)
-    lut = pq_lut(pq_subrows(queries, m, id_col, vec_col), book)
-    cand = codes.join(F.broadcast(q_cells), "cell").select(
-        "query_id", "vid", "sub", "code", "qc"
+    return pq_adc_rank_cells(
+        ivfadc_codes(emb, cen, book, m, residual, id_col, vec_col),
+        probe_cells(queries, cen, nprobe, id_col, vec_col),
+        pq_lut(pq_subrows(queries, m, id_col, vec_col), book),
+        m, k, residual,
     )
-    return pq_adc_rank_cells(cand, lut, m, k, qc_col="qc")
+
+
+def ivfadc_codes(
+    emb: DataFrame,
+    cen: DataFrame,
+    book: DataFrame,
+    m: int,
+    residual: bool = False,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vid, sub, code, cid): each vector's coarse cell
+    (:func:`argmax_cell`) with its PQ codes — of the raw vector, or
+    with ``residual`` of r = x − c(x)."""
+    cells = argmax_cell(vec_rows(emb, id_col, vec_col), cen)
+    rows = (
+        residual_subrows(cells, cen, m)
+        if residual
+        else pq_subrows(emb, m, id_col, vec_col)
+    )
+    return pq_encode(rows, book).join(cells.select("vid", "cid"), "vid")
 
 
 def residual_subrows(cells: DataFrame, cen: DataFrame, m: int) -> DataFrame:
-    """(vid, cell, sub, xs): each assigned vector's residual
-    r = x − c(x) (exact IEEE double subtraction per element), sliced
-    into m subvectors. ``cells`` is argmax_cell output
-    (vid, vec, vnorm, cid); ``cen`` broadcasts."""
+    """(vid, sub, xs): each assigned vector's residual r = x − c(x)
+    (exact IEEE double subtraction per element), sliced into m
+    subvectors. ``cells`` is argmax_cell output (vid, vec, vnorm,
+    cid); ``cen`` broadcasts."""
     rvec = F.zip_with(
         F.col("vec"), F.col("cen_vec"),
         lambda x, c: x.cast("double") - c.cast("double"),
     )
-    res = cells.join(F.broadcast(cen), "cid").select(
-        "vid", F.col("cid").alias("cell"), rvec.alias("rvec")
+    res = cells.join(F.broadcast(cen), "cid").select("vid", rvec.alias("rvec"))
+    return res.select(
+        "vid", F.posexplode(_subvecs("rvec", m)).alias("sub", "xs")
     )
-    dsub = (F.size(F.col("rvec")) / m).cast("int")
-    subs = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.slice(F.col("rvec"), s * dsub + 1, dsub),
-    )
-    return res.select("vid", "cell", F.posexplode(subs).alias("sub", "xs"))
 
 
 def residual_default_book(
-    rrows: DataFrame, n_centroids: int, ksub: int
+    emb: DataFrame,
+    cen: DataFrame,
+    m: int,
+    n_centroids: int,
+    ksub: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic residual codebook: residuals of the ksub lowest
     NON-CENTROID ids. Ids < n_centroids ARE the coarse centroids under
@@ -1138,43 +1165,14 @@ def residual_default_book(
     all-zero codebook quantizes every residual to 0 and the score
     degenerates to cell affinity alone (measured: recall@5 0.14 vs
     0.32 raw)."""
+    rrows = residual_subrows(
+        argmax_cell(vec_rows(emb, id_col, vec_col), cen), cen, m
+    )
     return rrows.where(
         f"vid >= {n_centroids} and vid < {n_centroids + ksub}"
     ).select(
         (F.col("vid") - n_centroids).alias("cid"), "sub",
         F.col("xs").alias("cs"),
-    )
-
-
-def residual_query_cells(
-    queries: DataFrame,
-    cen: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, cell, qc): each query's nprobe nearest coarse cells
-    (cosine rank, min-cid ties — the ivf_topk discipline) carrying the
-    residual-ADC base term qc = ⟨q, c⟩. Bounded Q·K frame."""
-    w_qrank = Window.partitionBy("query_id").orderBy(
-        F.col("qa_cos").desc(), F.col("cell")
-    )
-    return (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("q_norm"),
-        )
-        .crossJoin(F.broadcast(cen))
-        .select(
-            "query_id",
-            F.col("cid").alias("cell"),
-            dot(F.col("q_vec"), F.col("cen_vec")).alias("qc"),
-            (dot(F.col("q_vec"), F.col("cen_vec"))
-             / (F.col("q_norm") * F.col("cen_norm"))).alias("qa_cos"),
-        )
-        .withColumn("_qrn", F.row_number().over(w_qrank))
-        .where(F.col("_qrn") <= nprobe)
-        .select("query_id", "cell", "qc")
     )
 
 

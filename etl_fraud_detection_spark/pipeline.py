@@ -151,52 +151,14 @@ class Warehouse:
     def _vdir(p: str, v: int) -> str:
         return os.path.join(p, f"v{v:06d}")
 
-    @staticmethod
-    def _is_version_entry(name: str) -> bool:
-        import re
-
-        return re.fullmatch(r"v\d{6}(\.__tmp__)?", name) is not None
-
     def _current(self, p: str) -> int | None:
-        """Live version of the table at ``p`` (migrating a pre-version
-        flat layout to v1 lazily), or None if the table doesn't exist.
-        Version subdirs are excluded from the legacy-layout probe —
-        only files sitting flat in the table dir count."""
+        """Live version of the table at ``p``, or None if the table
+        doesn't exist."""
         cur = os.path.join(p, "_CURRENT")
-        if os.path.exists(cur):
-            with open(cur) as fh:
-                return int(fh.read().strip())
-        if not os.path.isdir(p):
+        if not os.path.exists(cur):
             return None
-        has_flat = False
-        for root, dirs, fs in os.walk(p):
-            if root == p:
-                dirs[:] = [d for d in dirs if not self._is_version_entry(d)]
-            if any(f.endswith(".parquet") for f in fs):
-                has_flat = True
-                break
-        if not has_flat:
-            return None
-        # legacy flat table: adopt its files as v1 via hardlinks
-        v1 = self._vdir(p, 1)
-        tmp = v1 + ".__tmp__"
-        for stale in (tmp, v1):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        os.makedirs(tmp)
-        for root, dirs, fs in os.walk(p):
-            if root == p:
-                dirs[:] = [d for d in dirs if not self._is_version_entry(d)]
-            rel = os.path.relpath(root, p)
-            tgt = tmp if rel == "." else os.path.join(tmp, rel)
-            os.makedirs(tgt, exist_ok=True)
-            for f in fs:
-                if f.startswith(("_", ".")):
-                    continue
-                os.link(os.path.join(root, f), os.path.join(tgt, f))
-        os.replace(tmp, v1)
-        _atomic_write(cur, "1")
-        return 1
+        with open(cur) as fh:
+            return int(fh.read().strip())
 
     def _set_current(self, layer: str, table: str, v: int, pre: int) -> None:
         """Flip the pointer to ``v``; ``pre`` is the version that was
@@ -572,7 +534,22 @@ class Warehouse:
         versions are recorded lazily on first touch (_set_current);
         the small driver-side meta files (watermarks) and the run-log
         file set are snapshotted up front so recover() can restore
-        them byte-exactly."""
+        them byte-exactly.
+
+        Refuses while a journal of an uncommitted run is on disk: that
+        journal's rollback points predate this run, so a later
+        recover() would undo this run's committed writes. Call
+        :meth:`recover` first."""
+        cj = self._commits_dir()
+        stale = sorted(
+            f for f in os.listdir(cj) if f.endswith(".inprogress.json")
+        ) if os.path.isdir(cj) else []
+        if stale:
+            raise RuntimeError(
+                f"run {stale[0][:-len('.inprogress.json')]} was begun and "
+                f"never committed ({os.path.join(cj, stale[0])}); call "
+                f"Warehouse.recover() before beginning run {run_id}"
+            )
         files: dict[str, str | None] = {}
         for rel in self._META_FILES:
             fp = os.path.join(self.root, rel)

@@ -1144,7 +1144,7 @@ def q_ann_ivfpq_residual_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    root = _fixture_root(sf_dir, ["embeddings"], "ivfpqres_v2")
+    root = _fixture_root(sf_dir, ["embeddings"], "ivfpqres_v3")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(
@@ -1163,7 +1163,7 @@ def _ivfpq_warehouse(spark: SparkSession, sf_dir: str):
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    root = _fixture_root(sf_dir, ["embeddings"], "ivfpq_v2")
+    root = _fixture_root(sf_dir, ["embeddings"], "ivfpq_v3")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(
@@ -1293,7 +1293,7 @@ def q_ann_opq_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import Warehouse
 
     emb = _t(spark, sf_dir, "embeddings")
-    root = _fixture_root(sf_dir, ["embeddings"], "opqivf_v1")
+    root = _fixture_root(sf_dir, ["embeddings"], "opqivf_v2")
     _built_once(
         root, "index/ivfpq_codes/_CURRENT",
         lambda: ann_index.ivfpq_build(

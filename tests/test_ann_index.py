@@ -77,8 +77,8 @@ def test_ingest_grows_index_without_touching_old_assignments(spark, wh):
     cen = wh.read("index", "ivf_centroids")
     fresh = {
         (r.vid, r.cid)
-        for r in ann_index._assign(
-            ann_index._vrows(_emb(spark, range(40, 55)), "vec_id", "embedding"), cen
+        for r in similarity.argmax_cell(
+            similarity.vec_rows(_emb(spark, range(40, 55)), "vec_id", "embedding"), cen
         ).select("vid", "cid").collect()
     }
     assert {(vid, after[vid][2]) for vid in range(40, 55)} == fresh
@@ -138,6 +138,32 @@ def test_kmeans_quantizer_slots_in(spark, wh):
     assert out.count() == 15  # 5 queries x top-3
     ann_index.ingest(wh, _emb(spark, range(50, 55)), run_id=2)
     assert wh.read("index", "ivf_assign").count() == 55
+
+
+def test_index_families_own_their_quantizer_tables(spark, wh):
+    """Each index family owns its tables: building an IVFADC index into
+    a warehouse that already holds an IVF and a flat-PQ index must not
+    change their answers (it once overwrote their centroid and codebook
+    tables)."""
+    emb = _emb(spark, range(60))
+    queries = emb.where("vec_id < 5")
+    ann_index.build(wh, emb, run_id=1, n_centroids=8)
+    ann_index.pq_build(wh, emb, run_id=2, m=2, ksub=8)
+
+    def answers():
+        return (
+            sorted(map(tuple, ann_index.probe(wh, queries, k=3).collect())),
+            sorted(map(tuple, ann_index.pq_probe(wh, queries, k=3).collect())),
+        )
+
+    before = answers()
+    assert before[0] == sorted(map(tuple, similarity.ivf_topk(
+        emb, k=3, n_centroids=8, query_pred="vec_id < 5").collect()))
+    assert before[1] == sorted(map(tuple, similarity.pq_adc_topk(
+        emb, k=3, m=2, ksub=8, query_pred="vec_id < 5").collect()))
+    ann_index.ivfpq_build(wh, emb, run_id=3, m=2, ksub=8, n_centroids=3,
+                          residual=True)
+    assert answers() == before
 
 
 def test_unbuilt_warehouse_raises_clearly(spark, wh):
@@ -440,7 +466,7 @@ def test_rebuild_recovers_recall_after_drift(spark, wh):
     idx = wh.read("index", "ivf_assign")
     fresh = {
         (r.vid, r.cid)
-        for r in ann_index._assign(
+        for r in similarity.argmax_cell(
             idx.select("vid", "vec", "vnorm"), cen
         ).select("vid", "cid").collect()
     }
@@ -465,7 +491,7 @@ def test_rebuild_crash_rolls_back_to_consistent_pair(spark, wh, monkeypatch):
     real_overwrite = Warehouse.overwrite
 
     def crashing(self, layer, table, df, partition_by=None):
-        if table == ann_index.T_ASSIGN:
+        if table == ann_index.IVF.t_rows:
             raise RuntimeError("chaos: died between rebuild swaps")
         return real_overwrite(self, layer, table, df, partition_by)
 
@@ -731,7 +757,7 @@ def test_ivfpq_residual_index_probe_matches_session_operator(spark, wh):
     ann_index.ivfpq_build(wh, emb, run_id=1, m=2, ksub=8, n_centroids=8,
                           residual=True)
     m = wh._manifest(1)
-    assert {"ivf_centroids", "pq_codebook", "ivfpq_codes", "ivfpq_meta"} <= {
+    assert {"ivfpq_centroids", "ivfpq_codebook", "ivfpq_codes", "ivfpq_meta"} <= {
         t.split("/")[-1] for t in m["tables"]
     }
     for nprobe in (1, 2):
@@ -813,7 +839,7 @@ def test_ivfpq_build_is_atomic_and_ingest_idempotent(spark, wh):
                           n_centroids=8)
     m = wh._manifest(7)
     tables = {t.split("/")[-1] for t in m["tables"]}
-    assert {"ivf_centroids", "pq_codebook", "ivfpq_codes"} <= tables
+    assert {"ivfpq_centroids", "ivfpq_codebook", "ivfpq_codes"} <= tables
 
     before = {(r.vid, r.sub): (r.code, r.cid)
               for r in wh.read("index", "ivfpq_codes").collect()}
@@ -828,11 +854,11 @@ def test_ivfpq_build_is_atomic_and_ingest_idempotent(spark, wh):
     assert wh.read("index", "ivfpq_codes").count() == 80
     # admitted vectors are probe-visible with cells consistent with the
     # stored quantizer: a fresh assign of the batch agrees
-    cen = wh.read("index", "ivf_centroids")
+    cen = wh.read("index", "ivfpq_centroids")
     fresh = {
         (r.vid, r.cid)
-        for r in ann_index._assign(
-            ann_index._vrows(_emb(spark, range(30, 40)), "vec_id", "embedding"),
+        for r in similarity.argmax_cell(
+            similarity.vec_rows(_emb(spark, range(30, 40)), "vec_id", "embedding"),
             cen,
         ).select("vid", "cid").collect()
     }
@@ -873,7 +899,7 @@ def test_argmax_cell_ignores_degenerate_zero_norm_centroid(spark):
         ],
         "cid int, cen_vec array<double>, cen_norm double",
     )
-    vecs = ann_index._vrows(_emb(spark, range(20)), "vec_id", "embedding")
+    vecs = similarity.vec_rows(_emb(spark, range(20)), "vec_id", "embedding")
     out = similarity.argmax_cell(vecs, cen)
     assert out.where("cid = 9").count() == 0
     clean = similarity.argmax_cell(vecs, cen.where("cid <> 9"))
@@ -969,7 +995,7 @@ def test_ivfpq_rebuild_reencodes_residual_codes_under_new_quantizer(spark, wh):
         ann_index.ivfpq_ingest(
             wh, _drifted(spark, range(lo, lo + 10)), run_id=2 + b
         )
-    assert ann_index._ivfpq_meta(wh) == {"residual": True, "qver": 1,
+    assert ann_index._meta(wh, ann_index.IVFADC) == {"residual": True, "qver": 1,
                                          "rotated": False}
     codes_v1 = wh.read("index", "ivfpq_codes")
     assert codes_v1.where("qver <> 1").count() == 0
@@ -993,14 +1019,14 @@ def test_ivfpq_rebuild_reencodes_residual_codes_under_new_quantizer(spark, wh):
     ann_index.ivfpq_rebuild(wh, union, run_id=9, m=2, ksub=8,
                             n_centroids=8, centroids=cen2)
 
-    assert ann_index._ivfpq_meta(wh) == {"residual": True, "qver": 2,
+    assert ann_index._meta(wh, ann_index.IVFADC) == {"residual": True, "qver": 2,
                                          "rotated": False}
     codes_v2 = wh.read("index", "ivfpq_codes")
     assert codes_v2.count() == n_rows
     assert codes_v2.where("qver <> 2").count() == 0  # nothing stale
     # one atomic commit: the run-9 manifest swaps all four tables
     tables = {t.split("/")[-1] for t in wh._manifest(9)["tables"]}
-    assert {"ivf_centroids", "pq_codebook", "ivfpq_codes",
+    assert {"ivfpq_centroids", "ivfpq_codebook", "ivfpq_codes",
             "ivfpq_meta"} <= tables
     # re-encoded under the NEW quantizer, byte-for-byte
     wh2 = Warehouse(spark, tempfile.mkdtemp(prefix="ivfpq_rebuild_ref_"))
@@ -1385,7 +1411,7 @@ def test_ivfpq_rotated_rebuild_keeps_rotation_lifecycle(spark, wh):
     ann_index.ivfpq_rebuild(
         wh, _emb(spark, range(60)), run_id=3, m=2, ksub=8, n_centroids=8,
     )
-    meta = ann_index._ivfpq_meta(wh)
+    meta = ann_index._meta(wh, ann_index.IVFADC)
     assert meta == {"residual": False, "qver": 2, "rotated": True}
     vers = wh.read("index", "ivfpq_codes").select("qver").distinct().collect()
     assert [r.qver for r in vers] == [2]  # every row re-encoded
@@ -1416,10 +1442,10 @@ def test_ivfpq_ingest_into_legacy_prever_index_keeps_schema(spark, wh):
         similarity.norm(SF.col("embedding")).alias("cen_norm"),
     )
     wh.begin_run(1)
-    wh.overwrite("index", "ivf_centroids", cen)
-    stored_cen = wh.read("index", "ivf_centroids")
+    wh.overwrite("index", "ivfpq_centroids", cen)
+    stored_cen = wh.read("index", "ivfpq_centroids")
     book = pq_default_codebook(emb, 2, 8)
-    wh.overwrite("index", "pq_codebook", book.select(
+    wh.overwrite("index", "ivfpq_codebook", book.select(
         SF.col("sub").cast("int"), SF.col("cid").cast("int"),
         SF.col("cs").cast("array<double>"),
     ))
@@ -1430,7 +1456,7 @@ def test_ivfpq_ingest_into_legacy_prever_index_keeps_schema(spark, wh):
         stored_cen,
     )
     codes = (
-        pq_encode(pq_subrows(emb, 2), wh.read("index", "pq_codebook"))
+        pq_encode(pq_subrows(emb, 2), wh.read("index", "ivfpq_codebook"))
         .join(cells.select("vid", SF.col("cid").alias("cell")), "vid")
         .select("vid", "sub", "code", SF.col("cell").alias("cid"))
     )
@@ -1499,7 +1525,7 @@ def test_opq_rebuild_reencodes_under_new_rotation(spark, wh):
 
     emb = _emb(spark, range(40))
     ann_index.opq_build(wh, emb, run_id=1, m=2, ksub=8)
-    assert ann_index._opq_meta(wh) == {"qver": 1}
+    assert ann_index._meta(wh, ann_index.OPQ) == {"qver": 1}
     ann_index.opq_ingest(wh, _emb(spark, range(40, 60)), run_id=2)
 
     union = _emb(spark, range(60))
@@ -1510,7 +1536,7 @@ def test_opq_rebuild_reencodes_under_new_rotation(spark, wh):
     )
     ann_index.opq_rebuild(wh, union, run_id=3, m=2, ksub=8, rotation=R2,
                           codebooks=books2)
-    assert ann_index._opq_meta(wh) == {"qver": 2}
+    assert ann_index._meta(wh, ann_index.OPQ) == {"qver": 2}
     vers = wh.read("index", "opq_codes").select("qver").distinct().collect()
     assert [r.qver for r in vers] == [2]  # every row re-encoded
 

@@ -267,3 +267,32 @@ def test_partition_spec_restored_on_rollback(spark, tmp_path):
     vdir = wh2._vdir(wh2.path("stg", "t"), cur)
     assert any(name.startswith("p=") for name in os.listdir(vdir))
     assert not any(name.endswith(".parquet") for name in os.listdir(vdir))
+
+
+def test_stale_journal_blocks_begin_run_until_recovered(spark, tmp_path):
+    """A run begun and never committed leaves its journal on disk. A
+    fresh Warehouse that began and committed a new run on top of it
+    would lose that commit to the next recover(), whose rollback points
+    predate it. begin_run refuses until recover() has run, and the
+    run committed after recovery survives a later recover()."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    wh.begin_run(1)
+    wh.overwrite("l", "t", spark.range(1))
+    wh.commit_run(1)
+    wh.begin_run(2)
+    wh.overwrite("l", "t", spark.range(2))  # the process dies here
+
+    wh3 = Warehouse(spark, root)
+    with pytest.raises(RuntimeError, match=r"run 2 .*recover\(\)"):
+        wh3.begin_run(3)
+    assert wh3.recover() == 2
+    assert wh3.read("l", "t").count() == 1
+    wh3.begin_run(3)
+    wh3.overwrite("l", "t", spark.range(3))
+    wh3.commit_run(3)
+    assert wh3.commits() == [1, 3]
+
+    later = Warehouse(spark, root)
+    assert later.recover() is None
+    assert later.read("l", "t").count() == 3

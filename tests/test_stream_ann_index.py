@@ -140,11 +140,11 @@ def test_streaming_vector_admission_grows_frozen_ivfpq_index(spark, tmp_path):
     seed = spark.createDataFrame([(i, _vec(i)) for i in range(16)], SCHEMA)
     ann_index.ivfpq_build(wh, seed, run_id=1, m=2, ksub=8, n_centroids=4)
     cen_before = sorted(
-        map(tuple, wh.read("index", "ivf_centroids").collect())
+        map(tuple, wh.read("index", "ivfpq_centroids").collect())
     )
     book_before = sorted(
         (r.sub, r.cid, tuple(r.cs))
-        for r in wh.read("index", "pq_codebook").collect()
+        for r in wh.read("index", "ivfpq_codebook").collect()
     )
 
     # batch 2 redelivers vec 20 (already admitted in batch 0)
@@ -172,11 +172,11 @@ def test_streaming_vector_admission_grows_frozen_ivfpq_index(spark, tmp_path):
     assert codes.count() == len(vids) * 2  # m=2 rows per vid, no dupes
     # BOTH quantizers frozen across every streamed batch
     assert cen_before == sorted(
-        map(tuple, wh.read("index", "ivf_centroids").collect())
+        map(tuple, wh.read("index", "ivfpq_centroids").collect())
     )
     assert book_before == sorted(
         (r.sub, r.cid, tuple(r.cs))
-        for r in wh.read("index", "pq_codebook").collect()
+        for r in wh.read("index", "ivfpq_codebook").collect()
     )
     assert not wh.read("index", "ivfpq_meta").first()["residual"]
     # a vector admitted mid-stream is probe-visible through the
