@@ -128,22 +128,25 @@ OPQ = IndexSpec(
 )
 
 
-def _read(wh, spec: IndexSpec, table: str | None) -> DataFrame | None:
-    """A table the family owns; None for an artifact it has none of."""
-    if table is None:
-        return None
-    df = wh.read(LAYER, table)
-    if df is None:
+def _built(spec: IndexSpec, table: str, got):
+    """``got`` (a read of ``table``), or a descriptive error if the
+    family's build never stored it."""
+    if got is None:
         raise ValueError(
             f"ANN index not built: table {LAYER}.{table} is missing in "
             f"this warehouse — call ann_index.{spec.prefix}build() before "
             f"ingest/probe"
         )
-    return df
+    return got
+
+
+def _read(wh, spec: IndexSpec, table: str | None) -> DataFrame | None:
+    """A table the family owns; None for an artifact it has none of."""
+    return None if table is None else _built(spec, table, wh.read(LAYER, table))
 
 
 def _meta(wh, spec: IndexSpec) -> dict:
-    """The stored meta row — ONE 1-row read (bounded-collect class).
+    """The stored meta row — a driver-side read, no Spark job.
     Indexes built before the meta table existed are version 0,
     unrotated raw codes (the only mode that existed then); an
     existing-but-EMPTY meta table is corrupt warehouse state and
@@ -151,37 +154,40 @@ def _meta(wh, spec: IndexSpec) -> dict:
     out = {"qver": 0}
     if spec.modal:
         out = {"residual": False, "qver": 0, "rotated": False}
-    meta = wh.read(LAYER, spec.t_meta) if spec.t_meta else None
-    if meta is None:
+    rows = wh.read_rows(LAYER, spec.t_meta) if spec.t_meta else None
+    if rows is None:
         return out
-    row = meta.first()
-    if row is None:
+    if not rows:
         raise ValueError(
             f"ANN index metadata corrupt: {LAYER}.{spec.t_meta} exists but "
             f"holds no row — the atomic commit should make this "
             f"impossible; rebuild the index (ann_index.{spec.prefix}build)"
         )
-    got = row.asDict()
-    return {key: type(v)(got.get(key) or v) for key, v in out.items()}
+    return {key: type(v)(rows[0].get(key) or v) for key, v in out.items()}
 
 
 def _stored(wh, spec: IndexSpec) -> tuple[IndexSpec, dict]:
     """The family spec with the stage switches its meta row records,
-    and the meta row."""
+    and the meta row plus ``m``, the stored codebook's subspace count
+    (0 without a codebook) — driver-side reads, no Spark job."""
     meta = _meta(wh, spec)
     if spec.modal:
         spec = replace(
             spec, rotate=meta["rotated"],
             encode="residual" if meta["residual"] else "raw",
         )
+    meta["m"] = 0
+    if spec.t_codebook is not None:
+        subs = wh.read_rows(LAYER, spec.t_codebook, ["sub"])
+        meta["m"] = max(r["sub"] for r in _built(spec, spec.t_codebook, subs)) + 1
     return spec, meta
 
 
 def _rotation(wh, spec: IndexSpec) -> list[list[float]]:
-    """The stored rotation, ordered by output coordinate — a d-row
-    bounded metadata collect (d = embedding dim)."""
-    rot = _read(wh, spec, spec.t_rotation)
-    return [list(r["r"]) for r in rot.orderBy("j").collect()]
+    """The stored rotation, ordered by output coordinate — d rows
+    (d = embedding dim) read on the driver, no Spark job."""
+    rows = _built(spec, spec.t_rotation, wh.read_rows(LAYER, spec.t_rotation))
+    return [r["r"] for r in sorted(rows, key=lambda r: r["j"])]
 
 
 def _rot_df(spark, rotation: list[list[float]]) -> DataFrame:
@@ -192,19 +198,13 @@ def _rot_df(spark, rotation: list[list[float]]) -> DataFrame:
     )
 
 
-def _pq_m(book: DataFrame) -> int:
-    """Subspace count from a codebook — a 1-row metadata aggregate
-    (the bounded-collect class)."""
-    return book.agg(F.max("sub")).first()[0] + 1
-
-
 def _check_book_m(codebooks: DataFrame, m: int) -> None:
     """Supplied trained codebooks must cover exactly the ``m``
     subspaces the vectors are sliced into — a mismatch would store
     codes sliced inconsistently with what every later probe derives
     from the stored book (silent wrong distances, the worst failure).
     1-row aggregate, build-time only."""
-    got = _pq_m(codebooks)
+    got = codebooks.agg(F.max("sub")).first()[0] + 1
     if got != m:
         raise ValueError(
             f"codebooks cover {got} subspaces but m={m}: vectors would "
@@ -233,7 +233,7 @@ def _static_cell_filter(codes: DataFrame, q_cells: DataFrame) -> DataFrame:
     same cell set. NOTE this makes every probe EAGER: a Spark job runs
     at probe-construction time even if the returned DataFrame is never
     evaluated (bounded — the rank is a Q×K frame)."""
-    cells = sorted(r[0] for r in q_cells.select("cid").distinct().collect())
+    cells = sorted({r[0] for r in q_cells.select("cid").collect()})
     if not cells:
         return codes.where(F.lit(False))
     return codes.where(F.col("cid").isin(cells))
@@ -388,8 +388,7 @@ def _ingest(
     )
     if spec.rotate:
         new = rotate_vecs(new, _rotation(wh, spec), vec_col=vec_col)
-    m = _pq_m(book) if book is not None else 0
-    out = _encode(spec, new, cen, book, m, meta["qver"], id_col, vec_col)
+    out = _encode(spec, new, cen, book, meta["m"], meta["qver"], id_col, vec_col)
     if spec.t_meta is not None and "qver" not in rows.columns:
         # pre-qver index (single legacy build = implicit version 0):
         # Warehouse.read does not mergeSchema, so stamping new rows
@@ -493,7 +492,7 @@ def _probe(
         # filtered at the parquet scan (pushed predicate + row-group
         # stats); pre-qver indexes have no column, single build
         rows = rows.where(F.col("qver") == F.lit(meta["qver"]))
-    m = _pq_m(book) if book is not None else 0
+    m = meta["m"]
     lut = None if book is None else pq_lut(
         pq_subrows(queries, m, id_col, vec_col), book
     )

@@ -396,7 +396,7 @@ def verify_export(wh, size_col: str, data_cols: list[str]) -> DataFrame:
     rows (expected vs actual) — empty means the export is intact.
     Full-outer on shard_id so a missing or extra shard surfaces too.
     Raises if no export was ever committed (either table absent) —
-    the ann_index._require discipline, instead of an AttributeError
+    the ann_index._read discipline, instead of an AttributeError
     off a None read."""
     written = wh.read(LAYER, T_SHARDS)
     stored = wh.read(LAYER, T_CHECKSUMS)

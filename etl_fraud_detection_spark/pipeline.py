@@ -249,6 +249,28 @@ class Warehouse:
             )
         return total
 
+    def read_rows(
+        self, layer: str, table: str, columns: list[str] | None = None
+    ) -> list[dict] | None:
+        """The CURRENT version's rows as dicts, read on the driver with
+        pyarrow — no Spark job. For small unpartitioned tables only
+        (metadata rows, quantizer artifacts). None if the table doesn't
+        exist."""
+        import pyarrow.parquet as pq
+
+        p = self.path(layer, table)
+        v = self._current(p)
+        if v is None:
+            return None
+        vdir = self._vdir(p, v)
+        return [
+            row
+            for f in sorted(self._parquet_files(vdir))
+            for row in pq.read_table(
+                os.path.join(vdir, f), columns=columns
+            ).to_pylist()
+        ]
+
     @staticmethod
     def _recorded_schema(vdir: str) -> StructType | None:
         """The schema a version's writer recorded in its ``_SCHEMA``

@@ -157,10 +157,6 @@ def test_index_families_own_their_quantizer_tables(spark, wh):
         )
 
     before = answers()
-    assert before[0] == sorted(map(tuple, similarity.ivf_topk(
-        emb, k=3, n_centroids=8, query_pred="vec_id < 5").collect()))
-    assert before[1] == sorted(map(tuple, similarity.pq_adc_topk(
-        emb, k=3, m=2, ksub=8, query_pred="vec_id < 5").collect()))
     ann_index.ivfpq_build(wh, emb, run_id=3, m=2, ksub=8, n_centroids=3,
                           residual=True)
     assert answers() == before
